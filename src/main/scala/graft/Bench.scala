@@ -11,34 +11,9 @@ import org.apache.spark.sql.functions._
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      // ContextCleaner only reaps shuffle files / broadcast blocks when
-      // driver GC collects their weak refs; the default periodicGC
-      // interval (30 min) never fires inside a ~17 min bench, so state
-      // from ~280 timed queries accumulates and pollutes neighbors
-      // (r9: untouched queries read 2-3× their isolated cost in-pass).
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      // Partition sizing for compute-dense inputs: at sf0.1 the larger
-      // tables (lineitem 36 MB, heavy tables 8-57 MB) pack into one or
-      // two 128 MB scan partitions and their pipelines under-parallelize
-      // (measured: session-wide 4 MB read the 75-query r8 common tail at
-      // 58.4 s vs 63.6 s on defaults, and heavy scans up to 12×). A real
-      // 100 TB deployment keeps the defaults — its scans have thousands
-      // of row groups regardless; this sizes the bench's small files to
-      // this machine, exactly what the conf exists for.
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.ui.enabled", "false")
-      // Deployment-path function registration (see Tables.localSession).
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.silenceBoundedWindowWarnings()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Tables.localSession("graft-bench", cpus)
+    HeavyBench.sizePartitions(spark)
 
     // Optional comma-separated name filter for iterating on one query.
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
@@ -51,7 +26,7 @@ object Bench {
     // SPARK_GRAFT_BENCH_OUT after EVERY light timing and heavy
     // fragment; (2) a JVM shutdown hook prints the current compact
     // summary (tagged "partial":true) so even a SIGTERM'd run ends in
-    // a parseable last line; (3) lights run before forked heavy so the
+    // a parseable last line; (3) lights run before heavy so the
     // headline total lands early.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_full.json")
     val nPasses = sys.env.getOrElse("SPARK_GRAFT_PASSES", "3").toInt
@@ -160,27 +135,6 @@ object Bench {
       System.err.println(s"[bench] table warmup failed: ${e.getMessage}")
     }
 
-    // Heavy-block ordering depends on the mode. FORKED (the default):
-    // every heavy entry runs in its own fresh JVM, structurally immune
-    // to this session's wake — so the heavy block runs LAST and the
-    // light headline total lands early (the r18 rc=124 artifact died
-    // with zero numbers because forked heavy ran first and blew the
-    // driver's window). INLINE (SPARK_GRAFT_HEAVY_FORK=0): the heavy
-    // timings share this JVM, and a full light sweep leaves wake the
-    // reaper cannot return (hundreds of codegen classes, fragmented
-    // old gen — measured: heavy g8_pagerank 14.7 s straight after
-    // warmup vs 25.1 s after two light passes WITH blocking unpersist
-    // between every query), so inline heavy still runs FIRST.
-    val forkedHeavy = !sys.env.get("SPARK_GRAFT_HEAVY_FORK").contains("0")
-    var heavyJson = ""
-    if (!forkedHeavy) {
-      heavyJson = HeavyBench.run(spark, sfDir, only)
-      // Reap so the first light-pass query does not run in the final
-      // heavy query's wake (measured: a 3× first-sample outlier that
-      // min-of-N then has to absorb).
-      reap(spark)
-    }
-
     // Each query is timed once per FULL pass and the per-query MIN over
     // two separated passes reported. Back-to-back min-of-2 (the old
     // scheme) still charged both samples under whatever GC pressure /
@@ -238,12 +192,14 @@ object Bench {
       }
     }
 
-    if (forkedHeavy) {
-      heavyJson = HeavyBench.run(spark, sfDir, only, frag => {
-        heavyFrags += frag
-        flushPartial()
-      })
-    }
+    // Heavy runs LAST: every entry runs in its own fresh JVM, immune
+    // to this session's wake, so the light headline total lands early
+    // (the r18 rc=124 artifact died with zero numbers because heavy
+    // ran first and used up the bench's time limit).
+    val heavyJson = HeavyBench.run(spark, sfDir, only, frag => {
+      heavyFrags += frag
+      flushPartial()
+    })
 
     val (line, summary) = render(heavyJson, partial = false)
     println(line)
@@ -340,20 +296,6 @@ object Bench {
     * a session with zero prior timed queries and 46.9 s after a single
     * light pass; blocking unpersist + cache clear restores the
     * isolated number inside a full run. */
-  /** The JDK-17 --add-opens set Spark 4 needs when a SparkSession is
-    * created outside spark-submit (matches
-    * org.apache.spark.launcher.JavaModuleOptions; build.sbt passes the
-    * same list to THIS JVM) — forked heavy children need it too. */
-  private[graft] val Jdk17Opens: Seq[String] = Seq(
-    "java.base/java.lang", "java.base/java.lang.invoke",
-    "java.base/java.lang.reflect", "java.base/java.io",
-    "java.base/java.net", "java.base/java.nio",
-    "java.base/java.util", "java.base/java.util.concurrent",
-    "java.base/java.util.concurrent.atomic",
-    "java.base/sun.nio.ch", "java.base/sun.nio.cs",
-    "java.base/sun.security.action", "java.base/sun.util.calendar",
-  ).flatMap(p => Seq("--add-opens", s"$p=ALL-UNNAMED"))
-
   private[graft] def reap(spark: SparkSession): Unit = {
     spark.catalog.clearCache()
     spark.sparkContext.getPersistentRDDs.values
@@ -374,6 +316,7 @@ object Bench {
   * Disable with SPARK_GRAFT_HEAVY=0. */
 object HeavyBench {
   import org.apache.spark.sql.DataFrame
+  import graft.Checkpoints.TruncateOps
   import graft.llm.Dedup
 
   private val Factors = Map("documents" -> 64, "embeddings" -> 16,
@@ -721,7 +664,7 @@ object HeavyBench {
           // Materialize extraction once (the registered query's shape:
           // each funnel branch otherwise re-runs the page scan
           // including the extraction expression chain).
-          .localCheckpoint()
+          .truncateLineage()
         queries.PipelineQueries.curationFunnelOf(extracted,
           portableCov = false, maxMeanWordLen = 20.0, minStopHits = 0,
           quota = 5000)
@@ -799,7 +742,7 @@ object HeavyBench {
           // Materialize extraction once (the registered query's shape:
           // each funnel branch otherwise re-runs the page scan
           // including the extraction expression chain).
-          .localCheckpoint()
+          .truncateLineage()
         queries.PipelineQueries.curationFunnelOf(extracted,
           portableCov = false, maxMeanWordLen = 20.0, minStopHits = 0,
           quota = 5000)
@@ -1443,48 +1386,59 @@ object HeavyBench {
       meta = Seq("threshold" -> "0.8", "max_bucket" -> "100",
         "increment_fraction" -> "\"1/16\"")))
 
+  /** Every heavy entry runs in a FRESH forked JVM — fresh codegen
+    * cache, fresh allocator, fresh block manager — so in-pass
+    * inflation from a prior entry's JVM wake is structurally
+    * impossible, not just reaped away (r17: the combined light+heavy
+    * pass read l2 at 3× its sole-workload record on identical code and
+    * fixture; forking makes the combined pass AND the sole-workload
+    * record the same measurement by construction). Fixtures are built
+    * once here in the parent (all stamped); children run sequentially
+    * and only read. */
   def run(spark: SparkSession, sfDir: String, only: Option[Set[String]],
           onFragment: String => Unit = _ => ()): String = {
     if (sys.env.get("SPARK_GRAFT_HEAVY").contains("0")) return ""
     val selected = Items.filter(i => only.forall(_.contains(i.name)))
     if (selected.isEmpty) return ""
-    // Fork-per-entry is the DEFAULT (SPARK_GRAFT_HEAVY_FORK=0 opts
-    // out): the driver's combined pass and the sole-workload record
-    // must be the same measurement by construction (r17: combined
-    // read l2 at 3× its record on identical code+fixture).
-    if (sys.env.get("SPARK_GRAFT_HEAVY_FORK").contains("0"))
-      runInline(spark, sfDir, selected)
-    else {
-      val forked = runForked(spark, sfDir, selected, onFragment)
-      // Defense in depth: an environment where children cannot launch
-      // (classpath/binary oddities) degrades to the inline mode
-      // rather than silently dropping the whole heavy block.
-      if (forked.contains(""""queries":{}""") || forked.isEmpty) {
-        System.err.println("[bench] forked heavy yielded nothing — falling back inline")
-        runInline(spark, sfDir, selected)
-      } else forked
+    try {
+      val dir = prepare(spark, sfDir, selected)
+      val items = selected.flatMap { i =>
+        val frag = spawnEntry(sfDir, i.name)
+        frag.foreach(onFragment) // flush the partial artifact per entry
+        frag
+      }
+      assemble(spark, dir, items)
+    } catch {
+      case e: Throwable =>
+        System.err.println(s"[bench] heavy block failed: ${e.getMessage}")
+        ""
     }
   }
 
-  /** Partition sizing scoped to the heavy block: the heavy tables are
-    * ~8-57 MB compressed but compute-dense (≈500 MB of text), and at
-    * the defaults (128 MB target, 4 MB open cost) a whole table packs
-    * into ONE scan partition — every scan-rooted heavy pipeline ran on
-    * one core (measured: the minhash band table 12 s single-threaded
-    * vs 1.0 s spread). The light passes keep the defaults (their
-    * sub-MB inputs would only gain task-scheduling overhead), and a
-    * real 100 TB deployment keeps them too — its scans have thousands
-    * of partitions regardless. */
-  private def withHeavyConf[T](spark: SparkSession)(body: => T): T = {
-    val prevMax = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes")
+  /** Bench partition sizing, set once for the whole session by every
+    * main that reads the heavy fixtures (Bench sets it for its light
+    * passes too).
+    *
+    * Scans: the heavy tables are ~8-57 MB compressed but ≈500 MB of
+    * text, and at the defaults (128 MB target, 4 MB open cost) a whole
+    * table packs into ONE scan partition — every scan-rooted heavy
+    * pipeline ran on one core (measured: the minhash band table 12 s
+    * single-threaded vs 1.0 s spread). The light passes gain too
+    * (measured: the 75-query r8 common tail at 58.4 s vs 63.6 s on
+    * defaults).
+    *
+    * Shuffles: one partition per core, not `Tables.localSession`'s
+    * two. The bench's shuffles are small, so a second wave of tasks is
+    * pure overhead (measured, 4 cores, 10-query light subset at sf0.1,
+    * sum of per-query min-of-3: median 40.9 s at 2× vs 36.5 s at 1×).
+    *
+    * A real 100 TB deployment keeps the scan defaults — its scans have
+    * thousands of row groups regardless. */
+  def sizePartitions(spark: SparkSession): Unit = {
+    spark.conf.set("spark.sql.shuffle.partitions",
+      spark.sparkContext.defaultParallelism.toString)
     spark.conf.set("spark.sql.files.maxPartitionBytes", "4m")
     spark.conf.set("spark.sql.files.openCostInBytes", "512k")
-    try body
-    finally {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", prevMax)
-      spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
-    }
   }
 
   /** Build the heavy dir and every per-entry fixture the selection
@@ -1521,61 +1475,21 @@ object HeavyBench {
     dir
   }
 
-  private def runInline(spark: SparkSession, sfDir: String,
-                        selected: Seq[HeavyItem]): String =
-    withHeavyConf(spark) {
-      try {
-        val dir = prepare(spark, sfDir, selected)
-        val items = selected.flatMap(measureItem(spark, dir, _))
-        assemble(spark, dir, items, forked = false)
-      } catch {
-        case e: Throwable =>
-          System.err.println(s"[bench] heavy block failed: ${e.getMessage}")
-          ""
-      }
-    }
-
-  /** Contention-immune mode (`SPARK_GRAFT_HEAVY_FORK=1`): every heavy
-    * entry runs in a FRESH forked JVM — fresh codegen cache, fresh
-    * allocator, fresh block manager — so in-pass inflation from a
-    * prior entry's JVM wake is structurally impossible, not just
-    * reaped away (r17: the driver's combined pass read l2 at 3× its
-    * sole-workload record on identical code and fixture; this mode
-    * makes the combined pass AND the sole-workload record the same
-    * measurement by construction, retiring the isolated_sec
-    * cross-check). Fixtures are built once here in the parent (all
-    * stamped); children run sequentially and only read. */
-  private def runForked(spark: SparkSession, sfDir: String,
-                        selected: Seq[HeavyItem],
-                        onFragment: String => Unit): String =
-    try {
-      val dir = withHeavyConf(spark) { prepare(spark, sfDir, selected) }
-      val items = selected.flatMap { i =>
-        val frag = spawnEntry(sfDir, i.name)
-        frag.foreach(onFragment) // flush the partial artifact per entry
-        frag
-      }
-      withHeavyConf(spark) { assemble(spark, dir, items, forked = true) }
-    } catch {
-      case e: Throwable =>
-        System.err.println(s"[bench] forked heavy block failed: ${e.getMessage}")
-        ""
-    }
-
-  /** Run one entry in a child JVM (same classpath/opens/memory as this
-    * one) and collect its JSON fragment from the marker line; child
-    * stderr streams through for progress. Bounded by a generous
-    * per-entry ceiling (SPARK_GRAFT_HEAVY_TIMEOUT_SEC, default 900 s —
-    * the slowest record-mode entry finishes in ~3 min): a wedged child
+  /** Run one entry in a child JVM with this JVM's own arguments
+    * (module opens, heap, system properties) and classpath, and
+    * collect its JSON fragment from the marker line; child stderr
+    * streams through for progress. Bounded by a generous per-entry
+    * ceiling (SPARK_GRAFT_HEAVY_TIMEOUT_SEC, default 900 s — the
+    * slowest record-mode entry finishes in ~3 min): a wedged child
     * (e.g. a Spark deadlock) is force-killed and the entry degrades
     * like the empty-fragment path instead of stalling the whole bench
     * indefinitely. */
   private def spawnEntry(sfDir: String, name: String): Option[String] = {
     val javaBin = sys.props("java.home") + "/bin/java"
-    val mem = sys.env.getOrElse("SPARK_DRIVER_MEM", "8g")
-    val cmd = Seq(javaBin) ++ Bench.Jdk17Opens ++ Seq(
-      s"-Xmx$mem", "-Dspark.ui.enabled=false",
-      "-Dspark.sql.session.timeZone=UTC",
+    import scala.jdk.CollectionConverters._
+    val jvmArgs = java.lang.management.ManagementFactory.getRuntimeMXBean
+      .getInputArguments.asScala.toSeq
+    val cmd = Seq(javaBin) ++ jvmArgs ++ Seq(
       "-cp", sys.props("java.class.path"),
       "graft.HeavyEntryMain", sfDir, name)
     val pb = new ProcessBuilder(cmd: _*)
@@ -1603,7 +1517,6 @@ object HeavyBench {
     }
     reader.join(5000)
     val code = p.exitValue()
-    import scala.jdk.CollectionConverters._
     val frag = lines.asScala.toList.reverseIterator.collectFirst {
       case l if l.startsWith(FragmentMarker) =>
         l.stripPrefix(FragmentMarker)
@@ -1616,14 +1529,13 @@ object HeavyBench {
   private[graft] val FragmentMarker = "GRAFT_HEAVY_FRAGMENT:"
 
   /** The child side: prepare (a stamped no-op after the parent's) +
-    * measure exactly one entry under the heavy confs. */
+    * measure exactly one entry. */
   private[graft] def runSingle(spark: SparkSession, sfDir: String,
-                               name: String): Option[String] =
-    withHeavyConf(spark) {
-      val selected = Items.filter(_.name == name)
-      val dir = prepare(spark, sfDir, selected)
-      selected.headOption.flatMap(measureItem(spark, dir, _))
-    }
+                               name: String): Option[String] = {
+    val selected = Items.filter(_.name == name)
+    val dir = prepare(spark, sfDir, selected)
+    selected.headOption.flatMap(measureItem(spark, dir, _))
+  }
 
   /** Warm, sample, and report one heavy entry; returns its
     * `"name":{…}` JSON fragment. */
@@ -1726,7 +1638,7 @@ object HeavyBench {
 
   /** The combined heavy JSON around the per-entry fragments. */
   private def assemble(spark: SparkSession, dir: String,
-                       items: Seq[String], forked: Boolean): String = {
+                       items: Seq[String]): String = {
       val f = Factors.map { case (k, v) => s""""$k":$v""" }.mkString(",")
       // rebuilt=false is the evidentiary bit for the serving entries:
       // their persisted stores (tokenizer/index/LM/bands) are the
@@ -1745,7 +1657,7 @@ object HeavyBench {
             .count(_.getPath.getName.endsWith(".parquet"))
           f""""${t.stripSuffix(".parquet")}":{"files":$parts,"mb":${duBytes(spark, s"$dir/$t") / 1e6}%.1f}"""
         }.mkString(",")
-      s""","heavy":{"factors":{$f},"forked":$forked,"fixture":{"layout":"$Layout","rebuilt":$lastBuildWasFresh,"tables":{$tableStats}},"queries":{${items.mkString(",")}}}"""
+      s""","heavy":{"factors":{$f},"forked":true,"fixture":{"layout":"$Layout","rebuilt":$lastBuildWasFresh,"tables":{$tableStats}},"queries":{${items.mkString(",")}}}"""
   }
 
   /** Times one full materialization; returns (seconds, result rows).
@@ -1961,27 +1873,18 @@ object HeavyBench {
   }
 }
 
-/** Child main for SPARK_GRAFT_HEAVY_FORK=1: measure exactly ONE heavy
-  * entry in a fresh JVM and print its JSON fragment behind the marker
-  * line. A fresh JVM per entry makes the measurement immune by
-  * construction to the previous entries' wake (codegen-class count,
-  * old-gen fragmentation, block-manager residue) — the failure mode
-  * the reap()/min-of-N/isolated_sec machinery could only mitigate. */
+/** Child main of [[HeavyBench.run]]: measure exactly ONE heavy entry
+  * in a fresh JVM and print its JSON fragment behind the marker line.
+  * A fresh JVM per entry makes the measurement immune by construction
+  * to the previous entries' wake (codegen-class count, old-gen
+  * fragmentation, block-manager residue) — the failure mode the
+  * reap()/min-of-N/isolated_sec machinery could only mitigate. */
 object HeavyEntryMain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, name) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.cleaner.periodicGC.interval", "60s")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.silenceBoundedWindowWarnings()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Tables.localSession("graft-heavy-entry", cpus)
+    HeavyBench.sizePartitions(spark)
     val frag = HeavyBench.runSingle(spark, sfDir, name)
     try spark.stop() catch { case _: Throwable => () }
     println(HeavyBench.FragmentMarker + frag.getOrElse(""))

@@ -1,21 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-only: stage-level timing of dense vs OPH signatures on the
   * longdoc heavy fixture (the d11/d3 longdoc entry pair). */
 object OphProfile {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Tables.localSession("graft-oph-profile", 32)
+    HeavyBench.sizePartitions(spark)
     val dir = HeavyBench.ensureHeavyDir(spark, "/root/testdata/sf0.1")
     val docs = spark.read.parquet(s"$dir/longdoc/documents.parquet")
     import graft.llm.Dedup

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Measurement tooling (optimization rounds): writes the
   * `.explain("formatted")` physical plan of selected registered
   * queries to `plans/<tag>/<name>_<suffix>.txt`, so plan-shape claims
@@ -18,19 +16,9 @@ object PlanDump {
     val suffix = args(0)
     val tag = sys.env.getOrElse("SPARK_GRAFT_PLAN_TAG", "r20")
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.files.maxPartitionBytes", "4m")
-      .config("spark.sql.files.openCostInBytes", "512k")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    Tables.silenceBoundedWindowWarnings()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Tables.localSession("graft-plandump", cpus)
+    HeavyBench.sizePartitions(spark)
     val wanted: Set[String] =
       if (args(1) == "all") SparkEntry.registry.map(_.name).toSet
       else args(1).split(",").toSet

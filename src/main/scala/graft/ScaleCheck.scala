@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+import graft.Checkpoints.TruncateOps
 
 /** Dev tool (not part of the driver contract): scale-sanity sweep.
   *
@@ -266,7 +267,7 @@ object ScaleCheck {
           .filter(col("doc_id") % (4L * n) === 0)
         n -> ((corpus, increment,
           llm.Dedup.minhashBandTable(corpus, "doc_id", "text")
-            .localCheckpoint()))
+            .truncateLineage()))
       }.toMap
 
     // pipe26's standing pack watermark per factor: the ×n corpus is
@@ -284,7 +285,7 @@ object ScaleCheck {
           llm.TokenizerStore.Params(merges = 200, minCount = 8L),
           numShards = 32, budgetTokens = 2048)
         n -> llm.Corpus.packWatermark(packed, col("n_bpe_tokens"),
-          budgetTokens = 2048).localCheckpoint()
+          budgetTokens = 2048).truncateLineage()
       }.toMap
 
     val ops = Seq(

@@ -117,9 +117,8 @@ object Tables {
   def documents(s: SparkSession, d: String): DataFrame  = load(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = load(s, d, "embeddings")
 
-  /** Session factory used by tests and ad-hoc mains. Bench/Verify build
-    * their own (driver contract), with the same shuffle sizing.
-    */
+  /** The one session factory: tests, perfbench and every main build
+    * their session here, so each measures the same confs. */
   def localSession(appName: String = "graft", threads: Int = 4): SparkSession = {
     val spark = SparkSession.builder()
       .master(s"local[$threads]")

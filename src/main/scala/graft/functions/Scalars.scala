@@ -65,9 +65,6 @@ object Scalars {
     * Ref: sources/base.py:153-215. */
   def truncateField(c: Column, n: Int): Column = substring(c, 1, n)
 
-  /** P10 — strip `=` from ids. Ref: sources/base.py:182. */
-  def stripEquals(c: Column): Column = translate(c, "=", "")
-
   /** F2 — HTML entity unescape for exactly the named-entity set the
     * reference handles: saxutils.unescape defaults (amp/lt/gt) plus
     * quot/apos (ref: conversions.py:67-78). Numeric references like

@@ -198,33 +198,13 @@ object Citations {
     * column is named `__v` inside the loop; `contribution` is an
     * expression over (`__v`, `deg`), `update` over (`inflow`). The
     * deduped edge list is read 2 + 2·iterations times (vertices,
-    * degrees, per-iteration contributions); localCheckpoint
+    * degrees, per-iteration contributions); [[graft.Checkpoints]]
     * materializes it once instead of re-running the upstream parse
     * lineage on every use (the d8 connected-components pattern). */
   private def pageRankLoop(edges: DataFrame, iterations: Int,
                            init: Column, contribution: Column,
-                           update: Column, valueName: String,
-                           checkpointDir: Option[String]): DataFrame = {
+                           update: Column, valueName: String): DataFrame = {
     require(iterations >= 0, "iterations must be >= 0")
-    // localCheckpoint stores blocks on the executors that computed
-    // them — fine in local mode, but on a cluster it pins those
-    // executors (losing one recomputes from nothing) and blocks
-    // dynamic deallocation. A deployment passes a (HDFS/object-store)
-    // checkpoint dir instead: same truncation semantics, but the
-    // materialized tables survive executor loss.
-    // NOTE: Spark's checkpoint dir is SparkContext-global — passing
-    // checkpointDir redirects it for the whole session (documented at
-    // the public pageRank/pageRankExact params). setCheckpointDir
-    // qualifies the path and appends a per-registration UUID subdir,
-    // so there is no reliable "already set to this dir" test — every
-    // call re-registers, which is also what isolates concurrent runs
-    // from each other's checkpoint files.
-    val persist: DataFrame => DataFrame = checkpointDir match {
-      case Some(dir) =>
-        edges.sparkSession.sparkContext.setCheckpointDir(dir)
-        df => df.checkpoint()
-      case None => df => df.truncateLineage()
-    }
     // The edge list is laid out by `citing` BEFORE materialization so
     // every iteration's contribution join reads it in place — the
     // distinct's (citing, cited) partitioning satisfies no
@@ -255,8 +235,8 @@ object Citations {
     // DataFrame is defined once, so its exchange subtree is
     // canonically identical every round). The r19 window-count variant
     // lost the same way plus a per-partition sort.
-    val e = persist(edges.select(col("citing"), col("cited")).distinct()
-      .repartition(col("citing")))
+    val e = edges.select(col("citing"), col("cited")).distinct()
+      .repartition(col("citing")).truncateLineage()
     val verts = allDoisUnique(e).cache()
     // Populate eagerly: an UN-materialized InMemoryRelation reports
     // the default (effectively infinite) size, which poisons every
@@ -291,30 +271,23 @@ object Citations {
       // though execution per round is flat (same failure d8's
       // duplicateGroups guards against). Materializing every few
       // rounds bounds plan depth at O(k) while amortizing the
-      // checkpoint cost; a cluster deployment points this at a
-      // checkpoint dir.
+      // checkpoint cost; a cluster deployment points
+      // spark.graft.checkpoint.dir at durable storage.
       if (i % LineageTruncateEvery == 0 && i < iterations)
-        ranks = persist(ranks)
+        ranks = ranks.truncateLineage()
     }
     ranks.withColumnRenamed("__v", valueName)
   }
 
-  /** `checkpointDir` (here and in [[pageRankExact]]): lineage
-    * truncation through a durable dir instead of localCheckpoint —
-    * localCheckpoint pins the computing executors (losing one
-    * recomputes from nothing) and blocks dynamic deallocation, a real
-    * dir survives them. CAVEAT: Spark's checkpoint dir is
-    * SparkContext-GLOBAL; passing one redirects it for the session. */
   def pageRank(edges: DataFrame, iterations: Int,
-               damping: Double = 0.85,
-               checkpointDir: Option[String] = None): DataFrame =
+               damping: Double = 0.85): DataFrame =
     pageRankLoop(edges, iterations,
       // Normalized start: every vertex at rank 1 (= N × 1/N).
       init = lit(1.0),
       contribution = col("__v") / col("deg"),
       update = lit(1.0 - damping) +
         lit(damping) * coalesce(col("inflow"), lit(0.0)),
-      valueName = "rank", checkpointDir = checkpointDir)
+      valueName = "rank")
 
   /** Fixed-point (integer-mass) PageRank: identical recurrence to
     * [[pageRank]] but in exact integer arithmetic — every vertex
@@ -337,14 +310,13 @@ object Citations {
     * multiply peaks at 85·(worst single-vertex inflow) ≤ 85·N·massUnit
     * — at massUnit 1e9 that allows N up to ~10⁸ vertices. */
   def pageRankExact(edges: DataFrame, iterations: Int,
-                    massUnit: Long = 1000000000L,
-                    checkpointDir: Option[String] = None): DataFrame =
+                    massUnit: Long = 1000000000L): DataFrame =
     pageRankLoop(edges, iterations,
       init = lit(massUnit),
       contribution = expr("__v div deg"),
       update = lit(15L * massUnit / 100) +
         expr("(85 * coalesce(inflow, 0L)) div 100"),
-      valueName = "mass", checkpointDir = checkpointDir)
+      valueName = "mass")
 
   /** Per citing-prefix self-citation share: of the edges a registrant
     * prefix emits, how many stay within the same prefix. One

@@ -379,18 +379,6 @@ object IndexStore {
       "IndexStore", op)
   }
 
-  /** ADC top-k from the persisted index: probed inverted lists stream
-    * codes only ([[Similarity.ivfpqTopK]]). `queries`' id column is
-    * `qid`; neighbor ids come from the stored lists. */
-  def searchTopK(spark: SparkSession, dir: String, params: Params,
-                 queries: DataFrame, qid: String, vec: String, k: Int,
-                 nprobe: Int = 2): DataFrame = {
-    val ix = read(spark, dir, params)
-    Similarity.ivfpqTopK(ix.codes.withColumnRenamed("id", qid),
-      ix.centroids, ix.codebook, queries, qid, vec, k, nprobe,
-      params.m, params.dim)
-  }
-
   /** Production search: ADC shortlist from the persisted index, exact
     * re-rank against the caller's raw-vector `corpus` table (raw
     * vectors live with the corpus, not in the index — the index stores

@@ -236,25 +236,11 @@ object Multimodal {
       .withColumn("frame_id",
         xxhash64(col("media_id"), col("frame_ms")))
 
-  /** Partition media rows so each task holds roughly `budgetBytes` of
-    * payload — large-blob hygiene before any wide stage.
-    *
-    * Note the driver-side 1-row aggregate: fine for one-off batch
-    * planning, but inside a composed pipeline prefer
-    * [[rebalanceBySize]], which needs no eager action. */
-  def repartitionByBytes(media: DataFrame, budgetBytes: Long): DataFrame = {
-    val total = media.select(coalesce(sum(length(col("content"))), lit(0L)))
-      .collect()(0).getLong(0)
-    // Ceil division: flooring would let a task carry up to 2× budget.
-    val parts = math.max(1L, (total + budgetBytes - 1) / budgetBytes).toInt
-    media.repartition(parts, col("media_id"))
-  }
-
-  /** Lazy alternative: AQE's REBALANCE hint sizes the post-shuffle
-    * partitions to `spark.sql.adaptive.advisoryPartitionSizeInBytes`
-    * from the ACTUAL runtime byte sizes — no driver-side pre-count, no
-    * eager action, and skewed media batches split automatically. Use
-    * this form whenever the repartition composes into a larger plan. */
+  /** Large-blob hygiene before any wide stage: AQE's REBALANCE hint
+    * sizes the post-shuffle partitions to
+    * `spark.sql.adaptive.advisoryPartitionSizeInBytes` from the ACTUAL
+    * runtime byte sizes — no up-front count, no eager action, and
+    * skewed media batches split automatically. */
   def rebalanceBySize(media: DataFrame): DataFrame =
     media.hint("rebalance", col("media_id"))
 }

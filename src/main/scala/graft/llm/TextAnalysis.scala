@@ -22,12 +22,6 @@ object TextAnalysis {
     size(array_distinct(t)).cast("double") / size(t)
   }
 
-  /** Mean token length (characters per token). */
-  def avgTokenLen(text: Column): Column = {
-    val t = Scalars.tokens(text)
-    aggregate(t, lit(0L), (acc, x) => acc + length(x)).cast("double") / size(t)
-  }
-
   /** Ratio of non-letter, non-digit, non-whitespace characters —
     * punctuation / markup noise signal. Unicode classes, not ASCII:
     * an `[^a-zA-Z0-9 ]` form would count every accented/Cyrillic/CJK
@@ -37,14 +31,9 @@ object TextAnalysis {
     (length(text) - length(regexp_replace(text, "[^\\p{L}\\p{N}\\s]", "")))
       .cast("double") / greatest(length(text), lit(1))
 
-  /** Stopword ratio against a small built-in English profile. */
+  /** A small built-in English stopword profile. */
   val EnStopwords: Seq[String] =
     Seq("the", "a", "an", "of", "to", "and", "in", "is", "on", "for")
-  def stopwordRatio(text: Column): Column = {
-    val t = Scalars.tokens(text)
-    size(filter(t, x => EnStopwords.map(s => x === s).reduce(_ || _)))
-      .cast("double") / size(t)
-  }
 
   /** Composite quality score in [0,1]: rewards lexical diversity and
     * clean characters, penalizes stopword stuffing. Weights are the
@@ -198,21 +187,6 @@ object TextAnalysis {
   def dupFracOf(ng: Column): Column =
     when(size(ng) === 0, lit(0.0))
       .otherwise((size(ng) - size(array_distinct(ng))) / size(ng))
-
-  /** Repeat fraction of token n-grams WITHOUT building the n-gram
-    * strings: each position hashes its n tokens through one multi-arg
-    * xxhash64 and the distinct count runs over longs. The string form
-    * allocates ~|tokens| joined strings per row per order (slice +
-    * array_join each) — measured 53 s/61 s for orders 2/3 over the
-    * ×64 heavy corpus vs ~3 s for the bare tokenize, i.e. the
-    * allocation IS the repetition-gate cost. Token→string mapping is
-    * injective (tokens cannot contain the joiner space), so the
-    * distinct count — and hence the fraction — equals the string
-    * form's, up to 64-bit hash collisions (~n²/2⁶⁴ ≈ 1e-12 per
-    * document at 10 K tokens; the t7 oracle compares against DuckDB's
-    * string-built fractions and tolerates that). */
-  def dupNgramHashFrac(toks: Column, n: Int): Column =
-    dupFracOf(hashNgrams(toks, n))
 
   /** The hashed n-gram array itself — stage this behind a generator
     * barrier on hot paths ([[repetitionStats]]/[[funnelStats]]) so the

@@ -4,7 +4,9 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** The config-driven lineage-truncation seam: unset → localCheckpoint
   * (no directory touched); `spark.graft.checkpoint.dir` set → durable
-  * checkpoint files under that dir. Rows identical either way. */
+  * checkpoint files under that dir. Rows identical either way. The
+  * source scan keeps it the ONLY seam, and `Tables.localSession` the
+  * only place a session is built. */
 class CheckpointsSpec extends AnyFunSuite {
   import TestSpark.spark
   import spark.implicits._
@@ -34,5 +36,43 @@ class CheckpointsSpec extends AnyFunSuite {
       spark.conf.unset(Checkpoints.DirConf)
       queries.Fixtures.deleteRecursively(dir)
     }
+  }
+
+  /** String/char literals and comments, matched left to right, so a
+    * comment opener inside a string (a file glob) opens no comment. */
+  private val LiteralOrComment = ("\"{3}[\\s\\S]*?\"{3}" +
+    """|"[^"\\\n]*(?:\\.[^"\\\n]*)*"|'(?:\\.|[^'\\])'""" +
+    """|//[^\n]*|/\*[\s\S]*?\*/""").r
+
+  /** `code` without its comments (a comment may name the call it
+    * explains). */
+  private def stripComments(code: String): String =
+    LiteralOrComment.replaceAllIn(code, m =>
+      if (m.matched.startsWith("/")) ""
+      else scala.util.matching.Regex.quoteReplacement(m.matched))
+
+  /** `src/main` sources without comments, keyed by file name. */
+  private lazy val mainSources: Seq[(String, String)] = {
+    import scala.jdk.CollectionConverters._
+    val root = java.nio.file.Paths.get("src/main/scala")
+    assert(java.nio.file.Files.isDirectory(root),
+      s"no $root under ${new java.io.File(".").getAbsolutePath}")
+    java.nio.file.Files.walk(root).iterator().asScala
+      .filter(_.toString.endsWith(".scala"))
+      .map(p => p.getFileName.toString ->
+        stripComments(java.nio.file.Files.readString(p)))
+      .toSeq
+  }
+
+  private def filesMatching(re: String): Set[String] =
+    mainSources.collect {
+      case (f, code) if re.r.findFirstIn(code).isDefined => f
+    }.toSet
+
+  test("only Tables builds a session and only Checkpoints truncates lineage") {
+    assert(mainSources.size > 50)
+    assert(filesMatching("""SparkSession\s*\.\s*builder\b""") == Set("Tables.scala"))
+    assert(filesMatching("""\blocalCheckpoint\s*\(|\.\s*checkpoint\s*\(""") ==
+      Set("Checkpoints.scala"))
   }
 }

@@ -92,19 +92,22 @@ class ClusterFidelitySpec extends AnyFunSuite {
     val edges = Tables.lineitem(spark, Sf)
       .select(concat(lit("O"), col("l_orderkey")).as("citing"),
         concat(lit("P"), col("l_partkey")).as("cited"))
-    def run(ckpt: Option[String]): Map[String, Long] =
-      graft.graph.Citations.pageRankExact(edges, iterations = 3,
-          checkpointDir = ckpt)
+    def run(): Map[String, Long] =
+      graft.graph.Citations.pageRankExact(edges, iterations = 3)
         .as[(String, Long)].collect().toMap
-    val default = run(None)
+    val default = run()
     val dir = tmpDir("graft-cfp")
     try {
-      val wide = withShufflePartitions(200)(run(Some(dir)))
+      spark.conf.set(Checkpoints.DirConf, dir)
+      val wide = withShufflePartitions(200)(run())
       // Integer-mass PageRank: sums of longs are associative, so the
       // partitioning (and the durable-checkpoint persistence path)
       // must not move a single unit of mass.
       assert(wide == default && default.nonEmpty)
-    } finally cleanup(dir)
+    } finally {
+      spark.conf.unset(Checkpoints.DirConf)
+      cleanup(dir)
+    }
   }
 
   test("LSH pair generation at 200 shuffle partitions equals the default") {

@@ -132,25 +132,27 @@ class GraphSpec extends AnyFunSuite {
   }
 
   test("pageRank via a real checkpoint dir equals the localCheckpoint path") {
-    // Cluster knob: a (durable) checkpoint dir replaces localCheckpoint
-    // — localCheckpoint pins the computing executors, a real dir
-    // survives them. Semantics must be identical, including across the
-    // every-5-rounds truncation boundary (7 iterations crosses it).
+    // Cluster knob: a (durable) spark.graft.checkpoint.dir replaces
+    // localCheckpoint — localCheckpoint pins the computing executors, a
+    // real dir survives them. Semantics must be identical, including
+    // across the every-5-rounds truncation boundary (7 iterations
+    // crosses it).
     val dir = java.nio.file.Files.createTempDirectory("pr_ckpt")
     try {
       val e = edges("a" -> "b", "a" -> "c", "b" -> "c")
       val local = Citations.pageRank(e, iterations = 7)
         .as[(String, Double)].collect().toMap
-      val durable = Citations.pageRank(e, iterations = 7,
-          checkpointDir = Some(dir.toString))
+      val localExact = Citations.pageRankExact(e, iterations = 7)
+        .as[(String, Long)].collect().toMap
+      spark.conf.set(Checkpoints.DirConf, dir.toString)
+      val durable = Citations.pageRank(e, iterations = 7)
         .as[(String, Double)].collect().toMap
       assert(durable == local)
-      val exact = Citations.pageRankExact(e, iterations = 7,
-          checkpointDir = Some(dir.toString))
+      val exact = Citations.pageRankExact(e, iterations = 7)
         .as[(String, Long)].collect().toMap
-      assert(exact == Citations.pageRankExact(e, iterations = 7)
-        .as[(String, Long)].collect().toMap)
+      assert(exact == localExact)
     } finally {
+      spark.conf.unset(Checkpoints.DirConf)
       graft.queries.Fixtures.deleteRecursively(dir)
     }
   }
