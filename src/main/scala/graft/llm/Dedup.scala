@@ -1,7 +1,9 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.functions.Scalars
 import graft.Checkpoints.TruncateOps
 
@@ -136,16 +138,25 @@ object Dedup {
     // signature equals the set signature). n > 1 keeps the staged
     // shingle-array path. Either way a null text evaluates to a null
     // sig where the replaced explode+aggregate pipeline emitted NO
-    // row — filter to preserve that contract for direct consumers
-    // (minhashSignaturePortable).
-    val sigs =
-      if (shingleN == 1)
-        docs.select(col(id).as("doc"), sigOf(col(text)).as("sig"))
-      else
-        shingleArrays(docs, id, text, shingleN)
-          .select(col("doc"), sigOf(col("toks")).as("sig"))
-    sigs.filter(col("sig").isNotNull)
+    // row — drop null texts to preserve that contract for direct
+    // consumers (minhashSignaturePortable).
+    if (shingleN == 1)
+      nonNullText(docs, text)
+        .select(col(id).as("doc"), sigOf(col(text)).as("sig"))
+    else
+      shingleArrays(nonNullText(docs, text), id, text, shingleN)
+        .select(col("doc"), sigOf(col("toks")).as("sig"))
   }
+
+  /** Drops null-text rows BEFORE a per-document signature expression.
+    * The signature expressions return null only for a null input, so
+    * this equals filtering the null signatures out, but a filter on the
+    * derived column would be pushed below the projection as a second
+    * evaluation of the whole signature (fallback expressions get no
+    * subexpression reuse across a Filter/Project pair; the
+    * `Multimodal.decodeImage` trap). */
+  private def nonNullText(docs: DataFrame, text: String): DataFrame =
+    docs.filter(col(text).isNotNull)
 
   /** The declarative signature pipeline [[signatureTable]] replaced —
     * explode + per-shingle hash + numHashes min(pmod(h·a + b, p))
@@ -549,15 +560,14 @@ object Dedup {
     graft.plans.MinHashOphSigExpr.register(docs.sparkSession)
     def sigOf(c: Column) = call_function(
       graft.plans.MinHashOphSigExpr.Name, c, lit(bins), lit(portable))
-    // Null-text docs: null sig → no row (the declarative pipeline's
-    // contract), same as signatureTable.
-    val sigs =
-      if (shingleN == 1)
-        docs.select(col(id).as("doc"), sigOf(col(text)).as("sig"))
-      else
-        shingleArrays(docs, id, text, shingleN)
-          .select(col("doc"), sigOf(col("toks")).as("sig"))
-    sigs.filter(col("sig").isNotNull)
+    // Null-text docs: no row (the declarative pipeline's contract),
+    // same as signatureTable.
+    if (shingleN == 1)
+      nonNullText(docs, text)
+        .select(col(id).as("doc"), sigOf(col(text)).as("sig"))
+    else
+      shingleArrays(nonNullText(docs, text), id, text, shingleN)
+        .select(col("doc"), sigOf(col("toks")).as("sig"))
   }
 
   /** The declarative OPH pipeline [[minhashOphSignature]] replaced —
@@ -1234,28 +1244,105 @@ object Dedup {
         col("keep"))
   }
 
+  /** Pair lists up to this many rows get their components on the
+    * driver ([[duplicateGroups]]): 100 K pairs are ~1.6 MB of longs.
+    * Near-dup pair graphs sit far below it (the perfbench neardup
+    * corpus of 20 K docs yields 4,297 pairs), while each distributed
+    * round costs a lineage truncation, a count and two shuffles' worth
+    * of Spark jobs. */
+  val MaxDriverEdges = 100000
+
   /** Duplicate-group clustering: connected components over an
     * undirected near-dup pair list (the step that turns `minhashLshPairs`
-    * output into "keep one per group" decisions), as iterative min-label
-    * propagation: each round every node takes the min label among itself
-    * and its neighbors, until fixpoint.
+    * output into "keep one per group" decisions).
     *
-    * Scale shape: one equi-join + one hash aggregate per round for the
-    * neighbor min, plus one self-join for pointer jumping
-    * (label(u) ← label(label(u))), lineage truncated per round with
-    * localCheckpoint (a cluster deployment points this at a checkpoint
-    * dir). The jump collapses label chains geometrically, so rounds =
-    * O(log diameter) — a 1000-link chain converges in ~10 rounds, not
-    * 1000 — while near-dup components (near-cliques) still finish in
-    * 2-3.
+    * The pair list is materialized once (a map-only lineage
+    * truncation), so the upstream pair plan is never computed twice.
+    * Then one of two paths labels the components:
+    *
+    *  - Driver path: if at most [[MaxDriverEdges]] pairs come back
+    *    from a bounded collect, and the ids are int/long with no null
+    *    endpoint, union-find runs on the driver and the labels return
+    *    as a local relation (cast back to the id type). Exact, because
+    *    min-id component labels are unique; it has no round cap, so it
+    *    never fails to converge.
+    *  - Distributed path (more pairs, other id types, or a null
+    *    endpoint, which this path emits as a node of its own): iterative
+    *    min-label propagation, each round every node takes the min label
+    *    among itself and its neighbors, until fixpoint. One equi-join +
+    *    one hash aggregate per round for the neighbor min, plus one
+    *    self-join for pointer jumping (label(u) ← label(label(u))),
+    *    lineage truncated per round. The jump collapses label chains
+    *    geometrically, so rounds = O(log diameter): a 1000-link chain
+    *    converges in ~10 rounds, not 1000, while near-dup components
+    *    (near-cliques) still finish in 2-3. If it has not converged
+    *    after `maxIter` rounds it throws rather than return
+    *    split components.
     *
     * Output: (node, group) — group is the component's minimum id; only
     * ids that appear in `pairs` are emitted (singletons are their own
     * group by definition; callers left-join + coalesce). */
   def duplicateGroups(pairs: DataFrame, idA: String = "id_a",
-                      idB: String = "id_b", maxIter: Int = 20): DataFrame = {
-    val edges = pairs.select(col(idA).as("s"), col(idB).as("d"))
-      .union(pairs.select(col(idB).as("s"), col(idA).as("d")))
+                      idB: String = "id_b", maxIter: Int = 20): DataFrame =
+    duplicateGroups(pairs, idA, idB, maxIter, MaxDriverEdges)
+
+  /** [[duplicateGroups]] with the driver-path bound as a parameter, so
+    * specs can force the distributed loop (bound 0). */
+  private[graft] def duplicateGroups(pairs: DataFrame, idA: String,
+                                     idB: String, maxIter: Int,
+                                     maxDriverEdges: Int): DataFrame = {
+    val pairList = pairs.select(col(idA).as("s"), col(idB).as("d"))
+      .truncateLineage()
+    val idType = pairList.schema("s").dataType
+    val driverPath = idType == pairList.schema("d").dataType &&
+      (idType == IntegerType || idType == LongType)
+    val small =
+      if (!driverPath) None
+      else Some(pairList.limit(maxDriverEdges + 1).collect())
+        .filter(rows => rows.length <= maxDriverEdges &&
+          !rows.exists(r => r.isNullAt(0) || r.isNullAt(1)))
+    small match {
+      case Some(rows) =>
+        val labels = componentMinima(
+          rows.map(r => (r.getAs[Number](0).longValue(),
+            r.getAs[Number](1).longValue())))
+        pairs.sparkSession.createDataFrame(
+            labels.toSeq.map { case (n, g) => Row(n, g) }.asJava,
+            StructType(Seq(StructField("node", LongType),
+              StructField("group", LongType))))
+          .select(col("node").cast(idType).as("node"),
+            col("group").cast(idType).as("group"))
+      case None => propagateLabels(pairList, maxIter)
+    }
+  }
+
+  /** Union-find over an edge list: (node, min id of its component) for
+    * every endpoint. Ids are ranked in sorted order and every union
+    * hangs the larger root under the smaller, so each root is its
+    * component's minimum. */
+  private def componentMinima(edges: Array[(Long, Long)]): Array[(Long, Long)] = {
+    val ids = (edges.map(_._1) ++ edges.map(_._2)).distinct.sorted
+    val parent = Array.range(0, ids.length)
+    def find(i: Int): Int = {
+      var r = i
+      while (parent(r) != r) r = parent(r)
+      var c = i
+      while (parent(c) != r) { val n = parent(c); parent(c) = r; c = n }
+      r
+    }
+    edges.foreach { case (a, b) =>
+      val ra = find(java.util.Arrays.binarySearch(ids, a))
+      val rb = find(java.util.Arrays.binarySearch(ids, b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    ids.indices.map(i => (ids(i), ids(find(i)))).toArray
+  }
+
+  /** The distributed path of [[duplicateGroups]] over a materialized
+    * (s, d) pair list. */
+  private def propagateLabels(pairList: DataFrame, maxIter: Int): DataFrame = {
+    val edges = pairList
+      .union(pairList.select(col("d").as("s"), col("s").as("d")))
       .distinct()
       .truncateLineage()
     var labels = edges.select(col("s").as("node")).distinct()
@@ -1271,14 +1358,7 @@ object Dedup {
       // column (`__own` — labels holds exactly one row per node, so
       // max() recovers it beside the min), which makes convergence
       // detection a filter over the materialized result instead of
-      // the prior shape's extra labels⋈newLabels shuffle join + count
-      // job per iteration. At fixture scale this measures parity
-      // (same-window min-of-3 light: pipe19 4.11 → 3.94 s, d12
-      // 3.63 → 3.55 s, d8 2.06 → 2.29 s — all within the window's
-      // noise; the loop converges in 1-2 rounds on <500-doc subsets),
-      // but each iteration drops two |V|-row shuffle sides and one
-      // whole job — the per-round cost that compounds at 100 TB
-      // vertex counts.
+      // a labels⋈newLabels shuffle join + count job per iteration.
       val reduced = labels.withColumn("__own", col("label"))
         .union(neighborMin.withColumn("__own",
           lit(null).cast(labels.schema("label").dataType)))
@@ -1363,12 +1443,11 @@ object Dedup {
     // single byte scan) — the declarative form below shuffled one row
     // per TOKEN into a `bits`-column sum aggregate. Bit-equality is
     // spec-pinned; a null text emits no row either way (the explode
-    // dropped it; here the null fingerprint is filtered).
+    // dropped it; here the null text is filtered).
     graft.plans.SimHashExpr.register(docs.sparkSession)
-    docs.select(col(id),
-        call_function(graft.plans.SimHashExpr.Name, col(text), lit(bits),
-          lit(portable)).as("simhash"))
-      .filter(col("simhash").isNotNull)
+    nonNullText(docs, text).select(col(id),
+      call_function(graft.plans.SimHashExpr.Name, col(text), lit(bits),
+        lit(portable)).as("simhash"))
   }
 
   /** The replaced explode + vote-aggregate SimHash — retained as the

@@ -2,6 +2,7 @@ package graft.pipeline
 
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.{ArrayType, DataType, MapType, StructType}
 
 /** The Luigi-analog task layer (SURVEY §3.1, §7.1 step 7): dated,
   * memoized, atomic parquet artifacts forming a driver-side DAG.
@@ -57,12 +58,27 @@ class TaskRunner(spark: SparkSession, baseDir: String) {
             s"${t.name}: duplicate dependency names in requires")
           val inputs = t.requires
             .map(d => d.name -> visit(d, stack + k)).toMap
-          t.build(spark, inputs)
-            .write.mode("overwrite").parquet(outputPath(t))
-        }
-        spark.read.parquet(outputPath(t))
+          val built = t.build(spark, inputs)
+          built.write.mode("overwrite").parquet(outputPath(t))
+          // Re-read with the schema just written (parquet stores every
+          // column nullable): a schema-less read would run one
+          // footer-inference Spark job per artifact.
+          spark.read.schema(asNullable(built.schema)).parquet(outputPath(t))
+        } else spark.read.parquet(outputPath(t))
       })
     }
     visit(target, Set.empty)
+  }
+
+  private def asNullable(s: StructType): StructType =
+    StructType(s.fields.map(f =>
+      f.copy(dataType = nullableType(f.dataType), nullable = true)))
+
+  private def nullableType(t: DataType): DataType = t match {
+    case s: StructType => asNullable(s)
+    case ArrayType(e, _) => ArrayType(nullableType(e), containsNull = true)
+    case MapType(k, v, _) =>
+      MapType(nullableType(k), nullableType(v), valueContainsNull = true)
+    case other => other
   }
 }

@@ -187,25 +187,38 @@ object BpeEncodeExpr {
   private val lenInfo =
     new ExpressionInfo(classOf[BpeSegLenExpr].getName, BpeSegLenExpr.Name)
   private val lock = new Object
+  /** The model the builders bind; set only while `lock` is held. */
+  private var bound: Broadcast[BpeTokenTable] = _
 
-  /** Register `bpe_encode` / `bpe_seglen` builders bound to `model`
-    * and run `f` with Column factories for both. The registration is
-    * per-model (the builder closure captures the broadcast), so the
-    * whole register→analyze window is serialized under one lock:
-    * Datasets analyze EAGERLY on construction, so every
-    * `call_function` reference `f` creates is resolved — and the model
-    * bound — before the lock is released and another query can
-    * re-register. Re-registration under the same name releases the
-    * previous closure (and its broadcast) to the ContextCleaner. */
+  private def boundModel(fn: String): Broadcast[BpeTokenTable] = {
+    require(bound != null, s"$fn is only resolvable inside BpeEncodeExpr.withBound")
+    bound
+  }
+  private val encodeBuilder = (children: Seq[Expression]) =>
+    BpeEncodeExpr(children.head, boundModel(Name))
+  private val lenBuilder = (children: Seq[Expression]) =>
+    BpeSegLenExpr(children.head, boundModel(BpeSegLenExpr.Name))
+
+  /** Bind `model` and run `f` with Column factories for `bpe_encode` /
+    * `bpe_seglen`. Both builders are registered once per session and
+    * read the model from `bound`, which is set for the whole
+    * bind→analyze window under one lock: Datasets analyze EAGERLY on
+    * construction, so every `call_function` reference `f` creates is
+    * resolved — and the model captured in its expression — before the
+    * lock is released and another query can rebind. */
   def withBound[A](spark: SparkSession, model: Broadcast[BpeTokenTable])
       (f: (Column => Column, Column => Column) => A): A =
     lock.synchronized {
       val reg = spark.sessionState.functionRegistry
-      reg.registerFunction(FunctionIdentifier(Name), info,
-        (children: Seq[Expression]) => BpeEncodeExpr(children.head, model))
-      reg.registerFunction(FunctionIdentifier(BpeSegLenExpr.Name), lenInfo,
-        (children: Seq[Expression]) => BpeSegLenExpr(children.head, model))
-      f(c => call_function(Name, c), c => call_function(BpeSegLenExpr.Name, c))
+      for ((fn, fi, fb) <- Seq((Name, info, encodeBuilder),
+          (BpeSegLenExpr.Name, lenInfo, lenBuilder))) {
+        val id = FunctionIdentifier(fn)
+        if (!reg.lookupFunction(id).exists(_ eq fi))
+          reg.registerFunction(id, fi, fb)
+      }
+      bound = model
+      try f(c => call_function(Name, c), c => call_function(BpeSegLenExpr.Name, c))
+      finally bound = null
     }
 }
 

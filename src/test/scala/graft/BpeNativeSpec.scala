@@ -98,4 +98,28 @@ class BpeNativeSpec extends AnyFunSuite {
       assert(expected.getOrElse(s, 0L) == id, s"symbol '$s'")
     }
   }
+
+  test("tokenizer calls register bpe_encode/bpe_seglen once and leave the registry entry unchanged") {
+    import org.apache.spark.sql.catalyst.FunctionIdentifier
+    val reg = spark.sessionState.functionRegistry
+    def entries() = Seq("bpe_encode", "bpe_seglen").map { n =>
+      val id = FunctionIdentifier(n)
+      (reg.lookupFunction(id).get, reg.lookupFunctionBuilder(id).get)
+    }
+    val (_, words) = TextAnalysis.bpeTrainFull(train, "doc_id", "text",
+      merges = 4, minCount = 1L)
+    TextAnalysis.bpeTokenCountsWith(serve, "doc_id", "text", words).collect()
+    val first = entries()
+    val ids = TextAnalysis.bpeTokenIdsWith(serve, "doc_id", "text", words)
+    val second = entries()
+    val replaced = first.zip(second).collect {
+      case ((i1, b1), (i2, b2)) if !(i1 eq i2) || !(b1 eq b2) => i2.getName
+    }
+    assert(replaced.isEmpty, s"re-registered: $replaced")
+    // Each query keeps the model it was analyzed with; the builders
+    // resolve nothing outside withBound.
+    assert(ids.count() > 0)
+    intercept[Exception](serve.selectExpr("bpe_seglen(text)").collect())
+  }
 }
+

@@ -21,23 +21,77 @@ class DedupSpec extends AnyFunSuite {
     assert(groups == Set((1L, 2L), (3L, 1L)))
   }
 
+  // Driver-path bound 0 forces the distributed propagation loop.
+  private def distributedGroups(pairs: org.apache.spark.sql.DataFrame) =
+    Dedup.duplicateGroups(pairs, "id_a", "id_b", 20, 0)
+
   test("duplicateGroups: chains collapse to one component, disjoint pairs stay apart") {
     // Path graph 1-2-3-4-5 (diameter 4 — exercises multi-round
     // propagation) plus the disjoint pair (10, 11).
     val pairs = Seq((1L, 2L), (2L, 3L), (3L, 4L), (4L, 5L), (10L, 11L))
       .toDF("id_a", "id_b")
-    val groups = Dedup.duplicateGroups(pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(groups == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      10L -> 10L, 11L -> 10L))
+    val expected = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+      10L -> 10L, 11L -> 10L)
+    assert(distributedGroups(pairs).as[(Long, Long)].collect().toMap == expected)
+    assert(Dedup.duplicateGroups(pairs).as[(Long, Long)].collect().toMap == expected)
   }
 
   test("duplicateGroups: pointer jumping converges a 120-link chain within the round cap") {
     // Without the label(label) jump this needs ~120 rounds and throws;
     // with it, O(log n) rounds suffice under the default cap of 20.
     val pairs = (0L until 120L).map(i => (i, i + 1)).toDF("id_a", "id_b")
-    val groups = Dedup.duplicateGroups(pairs).as[(Long, Long)].collect()
+    val groups = distributedGroups(pairs).as[(Long, Long)].collect()
     assert(groups.length == 121 && groups.forall(_._2 == 0L))
+  }
+
+  test("duplicateGroups: small graphs are labeled on the driver from one materialized pair list") {
+    val pairs = (0L until 120L).map(i => (i, i + 1)).toDF("id_a", "id_b")
+    val groups = Dedup.duplicateGroups(pairs)
+    // The labels come back as a local relation: no shuffle, no
+    // per-round truncation left in the plan.
+    val plan = groups.queryExecution.executedPlan.toString
+    assert(plan.contains("LocalTableScan"), plan)
+    assert(!plan.contains("Exchange"), plan)
+    val got = groups.as[(Long, Long)].collect()
+    assert(got.length == 121 && got.forall(_._2 == 0L))
+  }
+
+  test("duplicateGroups: a null endpoint takes the distributed path, which groups the null node") {
+    val pairs = Seq[(Option[Long], Option[Long])](
+      (Some(2L), Some(1L)), (Some(2L), None)).toDF("id_a", "id_b")
+    val got = Dedup.duplicateGroups(pairs).collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).toSet
+    assert(got == Set((Some(1L), Some(1L)), (Some(2L), Some(1L)),
+      (None, Some(1L))))
+    assert(distributedGroups(pairs).collect()
+      .map(r => (Option(r.get(0)), Option(r.get(1)))).toSet == got)
+  }
+
+  test("signature tables evaluate each signature expression once per document") {
+    // A null-text filter on the derived signature column would be
+    // pushed below the projection as a second evaluation of the whole
+    // fallback expression; the null texts are dropped on the input.
+    // Parquet-backed, so the projection is not folded into a local
+    // relation at optimization time.
+    val path = java.nio.file.Files.createTempDirectory("sigplan").toString + "/docs"
+    Seq[(Long, Option[String])]((1L, Some("a b c d")), (2L, None),
+      (3L, Some("b c d e"))).toDF("doc_id", "text").write.parquet(path)
+    val df = spark.read.parquet(path)
+    def evals(plan: org.apache.spark.sql.DataFrame, fn: String): Int =
+      s"$fn\\(".r.findAllIn(plan.queryExecution.executedPlan.toString).size
+    for (n <- Seq(1, 2)) {
+      val sig = Dedup.signatureTable(df, "doc_id", "text", n, 16, portable = false)
+      assert(evals(sig, "minhash_sig_arr") == 1,
+        sig.queryExecution.executedPlan.toString)
+      assert(sig.select("doc").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
+      val oph = Dedup.minhashOphSignature(df, "doc_id", "text", 16, n)
+      assert(evals(oph, "minhash_oph_sig") == 1,
+        oph.queryExecution.executedPlan.toString)
+      assert(oph.select("doc").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
+    }
+    val sim = Dedup.simhashTable(df, "doc_id", "text", 32)
+    assert(evals(sim, "simhash_fp") == 1, sim.queryExecution.executedPlan.toString)
+    assert(sim.select("doc_id").as[Long].collect().sorted.toSeq == Seq(1L, 3L))
   }
 
   test("OPH minhash LSH: never invents pairs, recall >= 0.9 vs exact") {

@@ -69,6 +69,43 @@ class PipelineSpec extends AnyFunSuite {
     intercept[IllegalArgumentException](new TaskRunner(spark, base).run(a))
   }
 
+  test("task graph: a fresh artifact is re-read with its written schema and no inference job") {
+    val base = java.nio.file.Files.createTempDirectory("tasks3").toString
+    def frame(s: SparkSession) = s.range(3).select(
+      col("id"), // non-nullable
+      struct(col("id").as("a"),
+        struct(lit("x").as("b"), array(col("id")).as("ids")).as("inner")).as("st"),
+      array(col("id"), lit(null).cast("long")).as("arr"),
+      array(struct(col("id").as("e"))).as("arr_st"),
+      map(lit("k"), struct(col("id").as("v"), lit(null).cast("string").as("w"))).as("m"),
+      lit(null).cast("string").as("nul"))
+    class Nested extends Task("nested", "2026-10-20") {
+      def build(s: SparkSession, in: Map[String, DataFrame]) = frame(s)
+    }
+    // Spark job ids are sequential: the jobs between two fence jobs
+    // are exactly the ones `body` started.
+    def jobsOf(body: => Unit): Int = {
+      def fence() = spark.sparkContext.parallelize(Seq(1), 1).countAsync()
+      val before = fence()
+      before.get()
+      body
+      val after = fence()
+      after.get()
+      after.jobIds.head - before.jobIds.head - 1
+    }
+    assert(!frame(spark).schema.forall(_.nullable))
+    val writeOnly = jobsOf(frame(spark).write.parquet(s"$base/plain"))
+    var out: DataFrame = null
+    val runJobs = jobsOf { out = new TaskRunner(spark, base).run(new Nested) }
+    assert(runJobs == writeOnly, s"run: $runJobs jobs, bare write: $writeOnly")
+    val inferred = spark.read.parquet(s"$base/nested/date=2026-10-20")
+    assert(out.schema == inferred.schema)
+    assert(out.collect().map(_.toString).sorted.toSeq ==
+      inferred.collect().map(_.toString).sorted.toSeq)
+    // A complete artifact keeps the plain read.
+    assert(new TaskRunner(spark, base).run(new Nested).schema == inferred.schema)
+  }
+
   test("AiUpdate DAG: end-to-end artifacts, memoized re-run, labeled export") {
     val base = java.nio.file.Files.createTempDirectory("aiupdate").toString
     val out = graft.pipeline.AiUpdate.run(spark, Sf, base, "2026-08-12")

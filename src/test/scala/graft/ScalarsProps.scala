@@ -170,4 +170,26 @@ object ScalarsProps extends Properties("Scalars") {
         got == expected
       }
     }
+
+  property("duplicateGroups driver union-find equals the distributed loop") =
+    Prop.forAll(Gen.chooseNum(2, 12), Gen.long, Gen.oneOf(false, true),
+        Gen.oneOf(false, true)) { (n, seed, intIds, nullEnd) =>
+      val rnd = new scala.util.Random(seed)
+      // A random graph over 0..n-1 plus a path over fresh ids (chains
+      // need several distributed rounds), optionally a null endpoint.
+      val random = Seq.fill(n)((rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
+      val chain = (0 until rnd.nextInt(n)).map(i => ((n + i).toLong, (n + i + 1).toLong))
+      val edges = (random ++ chain).map { case (a, b) => (Option(a), Option(b)) } ++
+        (if (nullEnd) Seq((Option(rnd.nextInt(n).toLong), Option.empty[Long])) else Nil)
+      val longs = edges.toDF("id_a", "id_b")
+      val pairs =
+        if (intIds) longs.select(col("id_a").cast("int"), col("id_b").cast("int"))
+        else longs
+      def run(bound: Int) = {
+        val g = Dedup.duplicateGroups(pairs, "id_a", "id_b", 20, bound)
+        (g.schema.map(f => (f.name, f.dataType)),
+          g.collect().map(r => (Option(r.get(0)), Option(r.get(1)))).toSet)
+      }
+      run(0) == run(Dedup.MaxDriverEdges)
+    }
 }
