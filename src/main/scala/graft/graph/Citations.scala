@@ -84,12 +84,12 @@ object Citations {
       .limit(k)
 
   /** Pairs of group members co-occurring under the same key, with the
-    * number of keys they share. Group sizes are screened FIRST
-    * (spill-safe countDistinct; groups outside [2, `maxGroupSize`] are
-    * dropped — the hub cap: a review paper citing thousands of works
-    * would otherwise emit O(n²) pairs), then the sorted distinct
-    * member set is collected only for survivors and pairs exploded
-    * from the array and re-counted. Output: (a, b, n_shared), a < b.
+    * number of keys they share. Each key's sorted distinct member set
+    * comes from the capped aggregate ([[graft.llm.Dedup.bucketMembers]];
+    * groups outside [2, `maxGroupSize`] are dropped — the hub cap: a
+    * review paper citing thousands of works would otherwise emit O(n²)
+    * pairs), then pairs are exploded from each member array and
+    * re-counted. Output: (a, b, n_shared), a < b.
     *
     * Measured and rejected (r10): running the quadratic stage on dense
     * int member ids (order-preserving dict, strings joined back only
@@ -107,41 +107,11 @@ object Citations {
   private def coOccurrencePairs(assignments: DataFrame, key: String,
                                 member: String, minShared: Int,
                                 maxGroupSize: Int): DataFrame = {
-    // Hub screening and member collection in ONE aggregation (r20):
-    // `collect_set_capped` accumulates the distinct member set only
-    // while it stays ≤ maxGroupSize and evaluates to NULL the moment
-    // a hub exceeds the cap — the aggregation buffer is bounded at
-    // cap elements by construction (a hub with millions of members
-    // never materializes), and partial aggregation dedupes+caps
-    // map-side, so hub keys ship at most cap+ε rows per map task.
-    // This replaces the r17-r19 count-FIRST shape (countDistinct
-    // screen + left-semi join back + collect_set over survivors),
-    // whose two branches could not share an exchange (their shuffles
-    // canonicalize differently), so the raw dump was scanned+PARSED
-    // twice — at 100 TB two full container decompressions.
-    // Materializing byKey to fix that was measured-and-rejected in
-    // r19 (localCheckpoint barrier cost > the concurrent second scan:
-    // g6 3.19 → 4.09 s); the capped aggregate removes the second scan
-    // WITHOUT the barrier. Same-window min-of-3 A/B (r20): heavy
-    // g6_coupling 4.72 → 3.30 s, heavy g6_coupling_midhub
-    // 6.62 → 5.71 s, light g5 2.27/1.93 → 1.80/1.56 s; light g6 reads
-    // ~0.5 s WORSE (3.30/3.48 → 4.01) — at fixture scale the old
-    // shape's duplicate scan ran concurrently for near-free while the
-    // capped partial agg pays real map-side hash-set work, but the
-    // pair total is parity and the heavy (scale-shaped) entries win
-    // 14-30%, which is the trade the 100 TB shape wants. Plan diff
-    // (plans/r20/g6_coupling_*): scan subtrees 2 → 1, Exchanges
-    // 3 → 2, SortMergeJoin 1 → 0, the countDistinct HashAggregate
-    // pair and the semi-join gone. Output is pinned equal by
-    // construction: capped(m, cap) IS NULL ⇔ countDistinct(m) > cap,
-    // else the array equals sort_array(collect_set(m)) (GraphSpec
-    // pins the saturation boundary; oracle green).
-    graft.plans.CollectSetCappedAgg.register(assignments.sparkSession)
-    assignments.select(col(key), col(member))
-      .groupBy(key)
-      .agg(sort_array(call_function(graft.plans.CollectSetCappedAgg.Name,
-        col(member), lit(maxGroupSize))).as("ms"))
-      .filter(col("ms").isNotNull && size(col("ms")) >= 2)
+    // Hub screening and member collection are ONE bounded aggregation,
+    // so the raw dump is scanned once (a count-first screen joined back
+    // scanned and parsed it twice).
+    graft.llm.Dedup.bucketMembers(assignments, Seq(key), col(member),
+        Some(maxGroupSize))
       // Explicit fan-out before the pair explosion: the member-array
       // table is tiny in BYTES (one compact array per key), so AQE's
       // byte-targeted coalescing would pack it into a handful of
@@ -155,7 +125,7 @@ object Citations {
       // determinism the hash layout gets for free.
       .repartition(assignments.sparkSession.sessionState.conf
         .numShufflePartitions, col(key))
-      .select(graft.llm.Dedup.sortedMemberPairs(col("ms")).as("p"))
+      .select(graft.llm.Dedup.memberPairs(col("ds")).as("p"))
       .groupBy(col("p.a").as("a"), col("p.b").as("b"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)

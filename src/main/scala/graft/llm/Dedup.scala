@@ -53,58 +53,84 @@ object Dedup {
             i => array_join(slice(t, i + 1, lit(n)), " "))))
         .otherwise(array(array_join(t, " ")))
 
-  /** All ordered pairs (a, b) with a < b from a sorted member array,
-    * as one exploded struct column with fields `a`/`b` — the shared
-    * pair-emission core of every bucketed candidate generator (LSH
-    * buckets here, co-citation groups in [[graft.graph.Citations]]).
-    * The `i + 2` is 1-based `slice` arithmetic: element i (0-based)
-    * pairs with everything strictly after it. */
-  private[graft] def sortedMemberPairs(ms: Column): Column =
-    explode(flatten(transform(ms, (x, i) =>
-      transform(slice(ms, i + 2, size(ms)),
-        y => struct(x.as("a"), y.as("b"))))))
-
-  /** Candidate pairs from a (key..., doc) bucket assignment table: one
-    * aggregation per bucket (map-side partial collect), pairs emitted by
-    * a lambda over the sorted member array — no per-bucket window, no
-    * two-branch self-join (which would recompute the whole upstream
-    * lineage twice), and the join fan-out is bounded by `maxBucketSize`
-    * inside the same aggregate. Output columns: (id_a, id_b), distinct,
-    * id_a < id_b. */
-  private[graft] def bucketPairs(assignments: DataFrame, keyCols: Seq[String],
-                               doc: String,
-                               maxBucketSize: Option[Int]): DataFrame = {
-    // With a cap, the collect and the cap screen are ONE bounded
-    // aggregation (collect_set_capped, r20): the former
-    // collect-then-filter shape built the unbounded member array the
-    // cap exists to forbid — a hub bucket with millions of members
-    // lived in a single unspillable aggregation buffer before the
-    // size filter threw it away, and every one of its members crossed
-    // the shuffle. Capped, the buffer tops out at cap elements and
-    // partial aggregation dedupes+caps map-side. NULL ⇔ over-cap is
-    // pinned equal to the filter shape (GraphSpec); same-window
-    // min-of-3 reads parity on the dense generator (heavy d3 3.5-4.0 s
-    // both halves, overlapping samples; light d3 1.54 → 1.36 s) and a
-    // real win where buckets run hot (light d12 incremental
-    // 3.53 → 2.77 s) — plus the bounded memory at hub-hot scale.
-    val grouped = (maxBucketSize match {
-      case Some(cap) =>
+  /** Capped bucket members: (keys..., ds) with `ds` the sorted distinct
+    * `member` values of each `keys` group that has 2+ of them — the
+    * candidate source of every bucketed pair generator (LSH bands and
+    * tables, SimHash blocks, k-means clusters, co-citation groups).
+    * With a cap the collect and the hub screen are ONE bounded
+    * aggregation (`collect_set_capped`): the buffer tops out at `cap`
+    * elements, partial aggregation dedupes and caps map-side, and an
+    * over-cap group evaluates to NULL (failing the size test) instead
+    * of materializing the member array the cap exists to forbid.
+    * `capped IS NULL ⇔ countDistinct > cap`, else the array equals
+    * `collect_set` (GraphSpec pins the boundary): a capped run equals an
+    * uncapped one with the over-cap groups filtered out. */
+  private[graft] def bucketMembers(assignments: DataFrame, keys: Seq[String],
+                                   member: Column,
+                                   cap: Option[Int]): DataFrame = {
+    val members = cap match {
+      case Some(c) =>
         graft.plans.CollectSetCappedAgg.register(assignments.sparkSession)
-        assignments
-          .groupBy(keyCols.map(col): _*)
-          .agg(sort_array(call_function(graft.plans.CollectSetCappedAgg.Name,
-            col(doc), lit(cap))).as("ds"))
-          .filter(col("ds").isNotNull)
-      case None =>
-        assignments
-          .groupBy(keyCols.map(col): _*)
-          .agg(sort_array(collect_set(col(doc))).as("ds"))
-    }).filter(size(col("ds")) >= 2)
-    grouped
-      .select(sortedMemberPairs(col("ds")).as("p"))
+        call_function(graft.plans.CollectSetCappedAgg.Name, member, lit(c))
+      case None => collect_set(member)
+    }
+    assignments.groupBy(keys.map(col): _*)
+      .agg(sort_array(members).as("ds"))
+      .filter(size(col("ds")) >= 2)
+  }
+
+  /** Every pair (x, y) of a sorted member array with x before y, as
+    * `pair(x, y)` structs (by default fields `a`, `b`) in one exploded
+    * column. `keep`, when given,
+    * runs inside the lambda, so a rejected pair (below threshold, not
+    * touching the increment) is dropped before it is emitted and only
+    * survivors reach the explode and any later shuffle. The `i + 2` is
+    * 1-based `slice` arithmetic: element i (0-based) pairs with
+    * everything strictly after it. */
+  private[graft] def memberPairs(ms: Column,
+                                 pair: (Column, Column) => Column =
+                                   (x, y) => struct(x.as("a"), y.as("b")),
+                                 keep: Option[Column => Column] = None): Column =
+    explode(flatten(transform(ms, (x, i) => {
+      val ps = transform(slice(ms, i + 2, size(ms)), y => pair(x, y))
+      keep.fold(ps)(filter(ps, _))
+    })))
+
+  /** Candidate pairs from a (key..., doc) bucket assignment table: the
+    * [[bucketMembers]] aggregate, pairs emitted over each sorted member
+    * array — no per-bucket window and no two-branch self-join. Output
+    * columns: (id_a, id_b), distinct, id_a < id_b. */
+  private[graft] def bucketPairs(assignments: DataFrame, keyCols: Seq[String],
+                                 doc: String,
+                                 maxBucketSize: Option[Int]): DataFrame =
+    bucketMembers(assignments, keyCols, col(doc), maxBucketSize)
+      .select(memberPairs(col("ds")).as("p"))
       .select(col("p.a").as("id_a"), col("p.b").as("id_b"))
       .distinct()
-  }
+
+  /** Id-keyed verify of an (id_a, id_b) candidate table: each side
+    * fetches its `attr` from the (doc, attr) table (as attr_a/attr_b),
+    * `scoreOf` scores the pair into column `score`, and `keep` filters
+    * on it. Output: (id_a, id_b, score). */
+  private def verifyPairs(candidates: DataFrame, attrs: DataFrame, attr: String,
+                          score: String, scoreOf: (Column, Column) => Column,
+                          keep: Column => Column): DataFrame =
+    candidates
+      .join(attrs.withColumnsRenamed(Map("doc" -> "id_a", attr -> s"${attr}_a")), Seq("id_a"))
+      .join(attrs.withColumnsRenamed(Map("doc" -> "id_b", attr -> s"${attr}_b")), Seq("id_b"))
+      .withColumn(score, scoreOf(col(s"${attr}_a"), col(s"${attr}_b")))
+      .filter(keep(col(score)))
+      .select(col("id_a"), col("id_b"), col(score))
+
+  /** The members of every bucket an increment touches: the standing
+    * corpus' rows semi-joined to the increment's `keys`, flagged
+    * `nw = false`, plus the increment's own rows with `nw = true`. Caps
+    * then count the FULL bucket membership, as in the full run. */
+  private def incrementMembers(corpus: DataFrame, increment: DataFrame,
+                               keys: Seq[String]): DataFrame =
+    corpus.join(increment.select(keys.map(col): _*).distinct(), keys, "left_semi")
+      .withColumn("nw", lit(false))
+      .unionByName(increment.withColumn("nw", lit(true)))
 
   val MinhashPrime = 2147483647L // 2^31 - 1 (Mersenne)
 
@@ -293,9 +319,6 @@ object Dedup {
     sh.select(col("doc"), core.bitwiseAND(lit(0x7FFFFFFFL)).as("h"))
   }
 
-  /** Shared LSH back-half: band the (doc, sig) table, bucket-join for
-    * candidates, verify with exact Jaccard. Factored so every signature
-    * family (classic permutation, OPH) runs the identical scale path. */
   /** (band, bucket, doc) table from a signature table. Carries only the
     * banded hash — token arrays would otherwise be replicated ×bands
     * through the shuffle; tokens rejoin only for the (much smaller)
@@ -328,6 +351,9 @@ object Dedup {
       Seq("band", "bucket"), "doc", maxBucketSize)
   }
 
+  /** The LSH back-half of every signature family (classic permutation,
+    * OPH): band the (doc, sig) table, bucket-join for candidates, verify
+    * with exact Jaccard. */
   private def lshVerifiedPairs(docs: DataFrame, id: String, text: String,
                                sig: DataFrame, threshold: Double,
                                shingleN: Int, bands: Int, rowsPerBand: Int,
@@ -335,18 +361,37 @@ object Dedup {
                                rawBuckets: Boolean = false): DataFrame = {
     val candidates = bucketPairs(bandTable(sig, bands, rowsPerBand, rawBuckets),
       Seq("band", "bucket"), "doc", maxBucketSize)
-
     // Production (hashed buckets) verifies on hashed token sets; the
     // portable path keeps strings so its oracle replays the verify.
-    val toks = shingleArrays(docs, id, text, shingleN, hashed = !rawBuckets)
-    candidates
-      .join(toks.withColumnsRenamed(Map("doc" -> "id_a", "toks" -> "toks_a")), Seq("id_a"))
-      .join(toks.withColumnsRenamed(Map("doc" -> "id_b", "toks" -> "toks_b")), Seq("id_b"))
-      // shingles() output is already distinct — skip jaccard's re-distinct.
-      .withColumn("jaccard",
-        jaccardDistinct(docs.sparkSession, col("toks_a"), col("toks_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
+    jaccardVerify(candidates,
+      shingleArrays(docs, id, text, shingleN, hashed = !rawBuckets), threshold)
+  }
+
+  /** Exact Jaccard verify of candidates against a (doc, toks) table of
+    * already-distinct shingle sets. */
+  private def jaccardVerify(candidates: DataFrame, toks: DataFrame,
+                            threshold: Double): DataFrame =
+    verifyPairs(candidates, toks, "toks", "jaccard",
+      jaccardDistinct(toks.sparkSession, _, _), _ >= threshold)
+
+  /** The persisted corpus artifact of the incremental path: one
+    * (doc, band, bucket) row per document per band. Production keeps
+    * this bucketed by (band, bucket) ([[graft.pipeline.Bucketing]])
+    * and appends each night's increment rows after pairing, so the
+    * corpus is NEVER re-signed; pass it to
+    * [[minhashLshPairsIncremental]] via `corpusBands`. */
+  def minhashBandTable(docs: DataFrame, id: String, text: String,
+                       shingleN: Int = 1, bands: Int = 16,
+                       rowsPerBand: Int = 8,
+                       portable: Boolean = false): DataFrame = {
+    val sig = signatureTable(docs, id, text, shingleN, bands * rowsPerBand,
+      portable)
+    // The persisted artifact's bucket column is STRING in both modes
+    // (portable: the raw band-slice key; production: the decimal form
+    // of the xxhash64 bucket, unchanged from the pre-expression
+    // schema).
+    bandTable(sig, bands, rowsPerBand, raw = portable)
+      .select(col("doc"), col("band"), col("bucket").cast("string").as("bucket"))
   }
 
   /** Incremental MinHash-LSH — near-dup pairs TOUCHING a new increment
@@ -375,30 +420,6 @@ object Dedup {
     * and uses the raw band-slice string as the bucket key, making the
     * ENTIRE path — signature, banding, candidate join, Jaccard verify
     * — reproducible in any engine with md5 (d12's DuckDB oracle). */
-  /** The persisted corpus artifact of the incremental path: one
-    * (doc, band, bucket) row per document per band. Production keeps
-    * this bucketed by (band, bucket) ([[graft.pipeline.Bucketing]])
-    * and appends each night's increment rows after pairing, so the
-    * corpus is NEVER re-signed; pass it to
-    * [[minhashLshPairsIncremental]] via `corpusBands`. */
-  def minhashBandTable(docs: DataFrame, id: String, text: String,
-                       shingleN: Int = 1, bands: Int = 16,
-                       rowsPerBand: Int = 8,
-                       portable: Boolean = false): DataFrame = {
-    val numHashes = bands * rowsPerBand
-    val sig = signatureTable(docs, id, text, shingleN, numHashes, portable)
-    graft.plans.MinHashBandsExpr.register(docs.sparkSession)
-    // The persisted artifact's bucket column is STRING in both modes
-    // (portable: the raw band-slice key; production: the decimal form
-    // of the xxhash64 bucket, unchanged from the pre-expression
-    // schema).
-    sig.select(col("doc"),
-      posexplode(call_function(graft.plans.MinHashBandsExpr.Name,
-        col("sig"), lit(bands), lit(rowsPerBand), lit(portable)))
-        .as(Seq("band", "bucket")))
-      .select(col("doc"), col("band"), col("bucket").cast("string").as("bucket"))
-  }
-
   def minhashLshPairsIncremental(corpus: DataFrame, increment: DataFrame,
                                  id: String, text: String,
                                  threshold: Double = 0.8, shingleN: Int = 1,
@@ -443,31 +464,14 @@ object Dedup {
       minhashBandTable(corpus, id, text, shingleN, bands, rowsPerBand, portable))
     val bNew = minhashBandTable(increment, id, text, shingleN, bands,
       rowsPerBand, portable)
-    val touched = bNew.select("band", "bucket").distinct()
-    val members = bOld.join(touched, Seq("band", "bucket"), "left_semi")
-      .withColumn("nw", lit(false))
-      .unionByName(bNew.withColumn("nw", lit(true)))
-
-    // Same bounded-buffer collect as bucketPairs (collect_set_capped,
-    // r20): a hub bucket never materializes its member array just to
-    // be size-filtered away.
-    val grouped = (maxBucketSize match {
-      case Some(cap) =>
-        graft.plans.CollectSetCappedAgg.register(members.sparkSession)
-        members.groupBy("band", "bucket")
-          .agg(sort_array(call_function(graft.plans.CollectSetCappedAgg.Name,
-            struct(col("doc"), col("nw")), lit(cap))).as("ms"))
-          .filter(col("ms").isNotNull)
-      case None =>
-        members.groupBy("band", "bucket")
-          .agg(sort_array(collect_set(struct(col("doc"), col("nw")))).as("ms"))
-    }).filter(size(col("ms")) >= 2)
-    val pairs = grouped
-      .select(sortedMemberPairs(col("ms")).as("p"))
-      // corpus×corpus pairs inside touched buckets are generated (the
-      // member arrays carry them; fan-out stays cap-bounded) and
-      // dropped here — only increment-touching pairs verify.
-      .filter(col("p.a.nw") || col("p.b.nw"))
+    val keys = Seq("band", "bucket")
+    // corpus×corpus pairs inside touched buckets are visited (fan-out
+    // stays cap-bounded) but never emitted — only increment-touching
+    // pairs verify.
+    val pairs = bucketMembers(incrementMembers(bOld, bNew, keys), keys,
+        struct(col("doc"), col("nw")), maxBucketSize)
+      .select(memberPairs(col("ds"),
+        keep = Some(p => p("a")("nw") || p("b")("nw"))).as("p"))
       .select(col("p.a.doc").as("id_a"), col("p.b.doc").as("id_b"))
       .distinct()
       // cache(), not localCheckpoint(): the candidate set (small,
@@ -520,14 +524,8 @@ object Dedup {
       hashed = !portable)
       .cache()
     toks.count()
-    val result = pairs
-      .join(toks.withColumnsRenamed(Map("doc" -> "id_a", "toks" -> "toks_a")), Seq("id_a"))
-      .join(toks.withColumnsRenamed(Map("doc" -> "id_b", "toks" -> "toks_b")), Seq("id_b"))
-      .withColumn("jaccard",
-        jaccardDistinct(corpus.sparkSession, col("toks_a"), col("toks_b")))
-      .filter(col("jaccard") >= threshold)
-      .select(col("id_a"), col("id_b"), col("jaccard"))
-    (result, () => { pairs.unpersist(false); toks.unpersist(false); () })
+    (jaccardVerify(pairs, toks, threshold),
+      () => { pairs.unpersist(false); toks.unpersist(false); () })
   }
 
   /** One-permutation MinHash signature (OPH): ONE hash per shingle,
@@ -660,9 +658,8 @@ object Dedup {
     else ophRegimeWarning(mean.getDouble(0), bins)
   }
 
-  /** MinHash-LSH near-dup pairs over the OPH signature — identical
-    * banding/candidate/verification path as [[minhashLshPairs]], with
-    * 128× fewer hash-min updates per token in the signature stage.
+  /** MinHash-LSH near-dup pairs over the OPH signature, with 128×
+    * fewer hash-min updates per token in the signature stage.
     * NOTE on what that buys: since both signature families became
     * single-pass native expressions paying ONE string hash per token
     * (the permutation family is register-level mult-adds), the wall-
@@ -940,54 +937,56 @@ object Dedup {
 
   /** Embedding-cosine near-dup at scale: candidates from multi-table
     * sign-LSH buckets (equi-join on (table, bucket) — never all-pairs),
-    * verified with exact cosine. */
+    * verified with exact cosine. `maxBucketSize` is the hot-bucket
+    * screen the MinHash family carries: 2^planes buckets is a
+    * CONSTANT, so without a cap the per-bucket pair volume — and the
+    * whole operator — goes quadratic as the corpus grows past
+    * tables×2^planes·cap (measured on the ScaleCheck media sweep: ×16
+    * corpus → ×199 time uncapped). A production run always caps; the
+    * bounded oracle twins keep None. */
   def embeddingNearDupPairsLsh(emb: DataFrame, id: String, vec: String,
                                threshold: Double, planes: Int = 8,
                                tables: Int = 6, dim: Int = 64,
                                maxBucketSize: Option[Int] = None)
-      : DataFrame = {
-    // `maxBucketSize` is the same hot-bucket screen the MinHash family
-    // carries: 2^planes buckets is a CONSTANT, so without a cap the
-    // per-bucket pair volume — and the whole operator — goes quadratic
-    // as the corpus grows past tables×2^planes·cap (measured on the
-    // ScaleCheck media sweep: ×16 corpus → ×199 time uncapped). A
-    // production run always caps; the bounded oracle twins keep None.
-    val staged = emb.select(col(id).as("doc"), col(vec).as("v"),
-      posexplode(Similarity.lshBucketsAll(emb.sparkSession, col(vec),
-        tables, planes, dim)).as(Seq("tbl", "bkt")))
-    lshVerifiedPairs(staged, threshold, maxBucketSize)
-  }
+      : DataFrame =
+    cosineBucketPairs(signBuckets(emb, id, vec, planes, tables, dim,
+      portable = false).withColumn("nw", lit(true)), threshold, maxBucketSize)
 
-  /** The shared verify tail of both embedding-LSH variants: members
-    * carry their VECTOR through the (table, bucket) aggregation and
-    * the exact-cosine threshold runs inside the pair-generation lambda
-    * (the semDedup discipline), so a below-threshold candidate is
-    * dropped before its pair struct materializes and the cross-table
-    * dedup `distinct()` shuffles only SURVIVORS. The trade is explicit
-    * and scale-directed: vectors cross the one bucket exchange
-    * `tables`× (linear in the corpus), in exchange for never shuffling
-    * the candidate-pair volume — the term that is quadratic per hot
-    * bucket and used to ride a distinct PLUS two id-keyed vector-fetch
-    * joins. */
-  private def lshVerifiedPairs(staged: DataFrame, threshold: Double,
-                               maxBucketSize: Option[Int]): DataFrame = {
-    graft.plans.GraftFunctions.register(staged.sparkSession)
-    val grouped = staged
-      .groupBy("tbl", "bkt")
-      .agg(sort_array(collect_set(struct(col("doc"), col("v")))).as("ms"))
-      .filter(size(col("ms")) >= 2)
-    val capped = maxBucketSize
-      .map(cap => grouped.filter(size(col("ms")) <= cap))
-      .getOrElse(grouped)
-    val survivors = flatten(transform(col("ms"), (x, i) =>
-      filter(
-        transform(slice(col("ms"), i + 2, size(col("ms"))), y =>
-          struct(x.getField("doc").as("id_a"),
-            y.getField("doc").as("id_b"),
-            call_function(graft.plans.GraftFunctions.Name,
-              x.getField("v"), y.getField("v")).as("sim"))),
-        p => p.getField("sim") >= threshold)))
-    capped.select(explode(survivors).as("p"))
+  /** (doc, v, tbl, bkt): each vector with its bucket in every one of
+    * `tables` sign-LSH tables — the fused native expression, or with
+    * `portable` the md5-derived engine-replayable family. */
+  private def signBuckets(emb: DataFrame, id: String, vec: String,
+                          planes: Int, tables: Int, dim: Int,
+                          portable: Boolean): DataFrame =
+    emb.select(col(id).as("doc"), col(vec).as("v"),
+      posexplode(
+        if (portable) Similarity.portableLshBuckets(col(vec), tables, planes, dim)
+        else Similarity.lshBucketsAll(emb.sparkSession, col(vec),
+          tables, planes, dim)).as(Seq("tbl", "bkt")))
+
+  /** The verify tail of every embedding-LSH variant, over (doc, v, tbl,
+    * bkt, nw) members: members carry their VECTOR through the capped
+    * (table, bucket) aggregate and the exact-cosine threshold runs
+    * inside the pair lambda, so a below-threshold candidate is never
+    * emitted and the cross-table dedup `distinct()` shuffles only
+    * survivors. Vectors cross the one bucket exchange `tables`× (linear
+    * in the corpus), in exchange for never shuffling the candidate-pair
+    * volume (quadratic per hot bucket). A pair must touch an `nw`
+    * member — a full run flags every member — and pair two distinct
+    * ids: a doc present in both corpus and increment (a stale persisted
+    * `corpusBuckets` artifact holding a re-ingested doc) occupies its
+    * bucket twice and would otherwise pair with itself at sim 1.0. */
+  private def cosineBucketPairs(members: DataFrame, threshold: Double,
+                                maxBucketSize: Option[Int]): DataFrame = {
+    val spark = members.sparkSession
+    bucketMembers(members, Seq("tbl", "bkt"),
+        struct(col("doc"), col("nw"), col("v")), maxBucketSize)
+      .select(memberPairs(col("ds"),
+        (x, y) => struct(x("doc").as("id_a"), y("doc").as("id_b"),
+          (x("nw") || y("nw")).as("inc"),
+          Similarity.cosineNative(spark, x("v"), y("v")).as("sim")),
+        Some(p => p("inc") && p("id_a") =!= p("id_b") &&
+          p("sim") >= threshold)).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
         round(col("p.sim"), 4).as("sim"))
       .distinct()
@@ -1007,9 +1006,9 @@ object Dedup {
     * makes the (tbl, bkt) join match nothing and increment-vs-corpus
     * pairs silently vanish; persist the parameters next to the
     * artifact. corpus×corpus pairs inside touched buckets are
-    * generated cap-bounded and dropped (reported when those docs
-    * arrived); verification is the same inline exact cosine as the
-    * full operator. */
+    * visited cap-bounded and never emitted (reported when those docs
+    * arrived). `portable` selects the md5-derived bucketing, so
+    * the whole path can sit under a DuckDB oracle. */
   def embeddingNearDupPairsIncremental(corpus: DataFrame,
                                        increment: DataFrame,
                                        id: String, vec: String,
@@ -1040,69 +1039,21 @@ object Dedup {
       maxBucketSize: Option[Int] = None,
       corpusBuckets: Option[DataFrame] = None,
       portable: Boolean = false): (DataFrame, () => Unit) = {
-    val spark = increment.sparkSession
-    graft.plans.GraftFunctions.register(spark)
-    // `portable` swaps the native sign-LSH for the md5-derived
-    // engine-replayable bucketing (the d5/d9/d13 twin pattern) so the
-    // whole incremental path can sit under a DuckDB oracle; production
-    // keeps the fused native expression.
-    def staged(df: DataFrame): DataFrame =
-      df.select(col(id).as("doc"), col(vec).as("v"),
-        posexplode(
-          if (portable) Similarity.portableLshBuckets(col(vec),
-            tables, planes, dim)
-          else Similarity.lshBucketsAll(spark, col(vec),
-            tables, planes, dim)).as(Seq("tbl", "bkt")))
-    val bOld = corpusBuckets.getOrElse(staged(corpus))
+    val bOld = corpusBuckets.getOrElse(
+      signBuckets(corpus, id, vec, planes, tables, dim, portable))
     // The increment's staged buckets feed TWO consumers (the touched
     // set and the member union); left lazy, the lineage ABOVE them —
     // which includes the increment's media DECODE when the features
     // are decode-derived — executes once per consumer (measured: the
     // m14 entry read 2× its decode term). cache + eager count
     // materializes it once; the cached set is increment-bounded
-    // (rows = docs × tables, vectors included). Callers invoking this
-    // repeatedly over fresh data (a streaming loop) should
-    // materialize the result and unpersist, the
-    // minhashLshPairsIncrementalReleasable discipline.
-    val bNew = staged(increment).cache()
+    // (rows = docs × tables, vectors included).
+    val bNew = signBuckets(increment, id, vec, planes, tables, dim, portable)
+      .cache()
     bNew.count()
-    val touched = bNew.select("tbl", "bkt").distinct()
-    val members = bOld.join(touched, Seq("tbl", "bkt"), "left_semi")
-      .withColumn("nw", lit(false))
-      .unionByName(bNew.withColumn("nw", lit(true)))
-    val grouped = members
-      .groupBy("tbl", "bkt")
-      .agg(sort_array(collect_set(
-        struct(col("doc"), col("nw"), col("v")))).as("ms"))
-      .filter(size(col("ms")) >= 2)
-    val capped = maxBucketSize
-      .map(cap => grouped.filter(size(col("ms")) <= cap))
-      .getOrElse(grouped)
-    // The lshVerifiedPairs pair lambda with the increment gate: a pair
-    // survives only if it touches the increment AND clears the inline
-    // cosine — both checked before the struct materializes, so the
-    // cross-table distinct shuffles survivors only.
-    val survivors = flatten(transform(col("ms"), (x, i) =>
-      filter(
-        transform(slice(col("ms"), i + 2, size(col("ms"))), y =>
-          struct(x.getField("doc").as("id_a"),
-            y.getField("doc").as("id_b"),
-            (x.getField("nw") || y.getField("nw")).as("inc"),
-            call_function(graft.plans.GraftFunctions.Name,
-              x.getField("v"), y.getField("v")).as("sim"))),
-        // id_a =!= id_b: a doc present in BOTH corpus and increment
-        // (e.g. a stale persisted corpusBuckets artifact still holding
-        // a doc now re-ingested) occupies the same bucket twice with
-        // nw=false and nw=true, and the i<j lambda would pair the two
-        // copies into a self-pair at sim 1.0.
-        p => p.getField("inc") &&
-          p.getField("id_a") =!= p.getField("id_b") &&
-          p.getField("sim") >= threshold)))
-    val pairs = capped.select(explode(survivors).as("p"))
-      .select(col("p.id_a").as("id_a"), col("p.id_b").as("id_b"),
-        round(col("p.sim"), 4).as("sim"))
-      .distinct()
-    (pairs, () => { bNew.unpersist(blocking = false); () })
+    (cosineBucketPairs(incrementMembers(bOld, bNew, Seq("tbl", "bkt")),
+        threshold, maxBucketSize),
+      () => { bNew.unpersist(blocking = false); () })
   }
 
   /** Portable twin of [[embeddingNearDupPairsLsh]] (the d5/d9 pattern:
@@ -1113,22 +1064,18 @@ object Dedup {
     * (`floor(x·1000 + 0.5)`, the e6 half-up-floor convention) before
     * the plane dot product, so the bucketing decision is
     * order-independent integer arithmetic that cannot flip under a
-    * different float summation order. Candidate generation is the same
-    * (table, bucket) equi-join, verification the same exact cosine
-    * (double, proven engine-portable by d6). Production keeps the
-    * fused native [[graft.plans.SignLshBucketsExpr]] path (d7); this
-    * twin exists to put the LSH-path math under the hash oracle. */
+    * different float summation order. Verification is exact cosine in
+    * double, proven engine-portable by d6. Production keeps
+    * the fused native [[graft.plans.SignLshBucketsExpr]] path (d7);
+    * this twin exists to put the LSH-path math under the hash oracle. */
   def embeddingNearDupPairsLshPortable(emb: DataFrame, id: String,
                                        vec: String, threshold: Double,
                                        planes: Int = 8, tables: Int = 6,
                                        dim: Int = 64,
                                        maxBucketSize: Option[Int] = None)
-      : DataFrame = {
-    val staged = emb.select(col(id).as("doc"), col(vec).as("v"),
-      posexplode(Similarity.portableLshBuckets(col(vec), tables, planes,
-        dim)).as(Seq("tbl", "bkt")))
-    lshVerifiedPairs(staged, threshold, maxBucketSize)
-  }
+      : DataFrame =
+    cosineBucketPairs(signBuckets(emb, id, vec, planes, tables, dim,
+      portable = true).withColumn("nw", lit(true)), threshold, maxBucketSize)
 
   /** SemDeDup (Abbas et al. 2023, arXiv:2303.09540): cluster-scoped
     * semantic dedup over an embedding column. The insight that makes
@@ -1177,47 +1124,18 @@ object Dedup {
         Similarity.cosineNative(spark, col("__v"), col("centroid"))
           .as("__csim"), col("__v"))
     val csim = withC.select("__id", "cluster", "__csim")
-    // Pair generation carries each member's centroid_sim AND VECTOR
-    // inside the one cluster-keyed aggregation (collect_set of
-    // (id, csim, v) structs — bounded by maxClusterSize × dim, ~1 MB a
-    // group at the heavy config), so the exact-cosine verify runs
-    // SCAN-LOCAL on the exploded pairs and the fat rows never cross an
-    // exchange: the previous shape paid a distinct() shuffle of the
-    // pair table plus TWO id-keyed vector-fetch joins (each shuffling
-    // the ~members²/2-per-cluster pair table again) for the same
-    // arithmetic. No distinct is needed here at all — membership is
-    // unique per cluster and clusters are disjoint, so an unordered
-    // pair arises exactly once. Member structs sort by id (unique per
-    // cluster), preserving bucketPairs' visit order and pair identity
-    // bit-for-bit.
-    val grouped = withC
-      .select(col("cluster"),
-        struct(col("__id"), col("__csim"), col("__v")).as("__m"))
-      .groupBy("cluster")
-      .agg(sort_array(collect_set(col("__m"))).as("ms"))
-      .filter(size(col("ms")) >= 2)
-    val capped = maxClusterSize
-      .map(cap => grouped.filter(size(col("ms")) <= cap))
-      .getOrElse(grouped)
-    // The cosine + threshold run INSIDE the pair-generation lambda, so
-    // a pair below threshold is dropped before its struct ever
-    // materializes — at a selective threshold the explode emits the
-    // few surviving near-dup pairs, not the ~members²/2 candidate
-    // volume (measured: the explode-then-filter form spent its time
-    // GC-ing 2 M transient fat pair structs at the heavy config).
-    graft.plans.GraftFunctions.register(spark)
-    val survivors = flatten(transform(col("ms"), (x, i) =>
-      filter(
-        transform(slice(col("ms"), i + 2, size(col("ms"))), y =>
-          struct(x.getField("__id").as("id_a"),
-            x.getField("__csim").as("ca"),
-            y.getField("__id").as("id_b"),
-            y.getField("__csim").as("cb"),
-            call_function(graft.plans.GraftFunctions.Name,
-              x.getField("__v"), y.getField("__v")).as("sim"))),
-        p => p.getField("sim") >= threshold)))
-    val ranked = capped
-      .select(explode(survivors).as("p"))
+    // Members carry their centroid_sim AND VECTOR through the one
+    // cluster-keyed aggregate, so the exact-cosine verify runs
+    // scan-local inside the pair lambda and fat rows never cross an
+    // exchange. No distinct is needed: membership is unique per
+    // cluster and clusters are disjoint, so a pair arises exactly once.
+    val ranked = bucketMembers(withC, Seq("cluster"),
+        struct(col("__id"), col("__csim"), col("__v")), maxClusterSize)
+      .select(memberPairs(col("ds"),
+        (x, y) => struct(x("__id").as("id_a"), x("__csim").as("ca"),
+          y("__id").as("id_b"), y("__csim").as("cb"),
+          Similarity.cosineNative(spark, x("__v"), y("__v")).as("sim")),
+        Some(_("sim") >= threshold)).as("p"))
       .select(col("p.id_a").as("id_a"), col("p.ca").as("ca"),
         col("p.id_b").as("id_b"), col("p.cb").as("cb"))
     val dropped = ranked
@@ -1478,8 +1396,7 @@ object Dedup {
     * (a pair within Hamming distance d must agree on ≥1 block when
     * d < blocks — pigeonhole), verified exactly with bit_count(xor).
     * Candidates come from [[bucketPairs]] on (block index, block
-    * value) — the same aggregation shape as the MinHash banding, never
-    * a cross join. Portable=true uses the md5 fingerprint family so the
+    * value), never a cross join. Portable=true uses the md5 fingerprint family so the
     * whole pipeline is oracle-checkable. */
   def simhashNearDupPairs(docs: DataFrame, id: String, text: String,
                           bits: Int = 16, blocks: Int = 4,
@@ -1487,15 +1404,9 @@ object Dedup {
                           maxBucketSize: Option[Int] = None): DataFrame = {
     val fp = simhashTable(docs, id, text, bits, portable)
       .withColumnRenamed(id, "doc")
-    val candidates = simhashBlockCandidates(fp, bits, blocks, maxHamming,
-      maxBucketSize)
-    val fps = fp.select(col("doc"), col("simhash"))
-    candidates
-      .join(fps.withColumnsRenamed(Map("doc" -> "id_a", "simhash" -> "fp_a")), Seq("id_a"))
-      .join(fps.withColumnsRenamed(Map("doc" -> "id_b", "simhash" -> "fp_b")), Seq("id_b"))
-      .withColumn("hamming", bit_count(col("fp_a").bitwiseXOR(col("fp_b"))))
-      .filter(col("hamming") <= maxHamming)
-      .select(col("id_a"), col("id_b"), col("hamming"))
+    verifyPairs(simhashBlockCandidates(fp, bits, blocks, maxHamming,
+        maxBucketSize), fp, "simhash", "hamming",
+      (a, b) => bit_count(a.bitwiseXOR(b)), _ <= maxHamming)
   }
 
   /** Block-agreement candidate stage of [[simhashNearDupPairs]], from a

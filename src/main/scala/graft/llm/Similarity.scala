@@ -47,15 +47,39 @@ object Similarity {
                      cosineFn: (Column, Column) => Column = cosine): DataFrame = {
     val q = broadcast(queries.select(col(id).as("query_id"), col(vec).as("qv")))
     val c = corpus.select(col(id).as("neighbor_id"), col(vec).as("cv"))
-    val scored = c.join(q, col("query_id") =!= col("neighbor_id"))
-      .withColumn("sim", cosineFn(col("qv"), col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-              round(col("sim"), 4).as("sim"))
+    topKBySim(c.join(q, col("query_id") =!= col("neighbor_id"))
+      .withColumn("sim", cosineFn(col("qv"), col("cv"))), k)
   }
+
+  /** The per-query cut of every search here: ranks each query_id's
+    * rows by `order` into `rank` (row_number; the order's last key
+    * breaks ties, so ranks are deterministic) and keeps ranks ≤ `k`. */
+  private def rankPerQuery(rows: DataFrame, k: Int, order: Column*): DataFrame =
+    rows.withColumn("rank",
+        row_number().over(Window.partitionBy("query_id").orderBy(order: _*)))
+      .filter(col("rank") <= k)
+
+  /** (query_id, neighbor_id, rank, sim ROUND 4): top-k by cosine,
+    * ties to the smaller neighbor id. */
+  private def topKBySim(scored: DataFrame, k: Int): DataFrame =
+    rankPerQuery(scored, k, col("sim").desc, col("neighbor_id").asc)
+      .select(col("query_id"), col("neighbor_id"), col("rank"),
+        round(col("sim"), 4).as("sim"))
+
+  /** (query_id, neighbor_id, rank, dist): top-k by distance, ties to the
+    * smaller neighbor id. */
+  private def topKByDist(scored: DataFrame, k: Int): DataFrame =
+    rankPerQuery(scored, k, col("dist").asc, col("neighbor_id").asc)
+      .select(col("query_id"), col("neighbor_id"), col("rank"), col("dist"))
+
+  /** Each (query_id, qv, …) row's `nprobe` nearest centroids by
+    * cosine, ties to the smaller cluster id: both sides are tiny and
+    * broadcast. Rows keep `cluster` and `centroid`. */
+  private def probeCentroids(q: DataFrame, centroids: DataFrame,
+                             nprobe: Int): DataFrame =
+    rankPerQuery(broadcast(q).join(broadcast(centroids), lit(true))
+      .withColumn("__csim", cosine(col("qv"), col("centroid"))),
+      nprobe, col("__csim").desc, col("cluster"))
 
   /** Sign-pattern LSH bucket id for one hash table: `planes`
     * pseudo-random hyperplanes with ±1 components derived
@@ -108,30 +132,18 @@ object Similarity {
       .agg(transform(array_sort(collect_list(struct(col("pos"), col("m")))),
         s => s.getField("m")).as("centroid"))
 
-    // Each query → its nprobe closest centroids.
-    val probes = broadcast(queries.select(col(id).as("query_id"), col(vec).as("qv")))
-      .join(broadcast(centroids), lit(true))
-      .withColumn("csim", cosine(col("qv"), col("centroid")))
-      .withColumn("crank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("csim").desc, col("cluster"))))
-      .filter(col("crank") <= nprobe)
+    val probes = probeCentroids(
+      queries.select(col(id).as("query_id"), col(vec).as("qv")), centroids, nprobe)
       .select(col("query_id"), col("qv"), col("cluster"))
-
-    val scored = corpus
+    // Exact scoring through the fused native cosine; the probe-side
+    // centroid cosine stays the HOF form (centroids are array<double>
+    // from avg()).
+    topKBySim(corpus
       .select(col(id).as("neighbor_id"), col(vec).as("cv"),
               col(clusterCol).as("cluster"))
       .join(broadcast(probes), Seq("cluster"))
       .filter(col("query_id") =!= col("neighbor_id"))
-      // Exact scoring through the fused native cosine; the probe-side
-      // centroid cosine above stays the HOF form (centroids are
-      // array<double> from avg()).
-      .withColumn("sim", cosineNative(corpus.sparkSession, col("qv"), col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-              round(col("sim"), 4).as("sim"))
+      .withColumn("sim", cosineNative(corpus.sparkSession, col("qv"), col("cv"))), k)
   }
 
   /** Portable sign-LSH bucket ids, one per table (index = table) — the
@@ -162,34 +174,14 @@ object Similarity {
     array((0 until tables).map(bucketOf): _*)
   }
 
-  /** [[lshTopK]] over the portable bucket family — identical candidate
-    * generation shape (bucket equi-join, never query×corpus), fully
-    * DuckDB-oracle-checkable end to end (e8). */
+  /** [[lshTopK]] over the portable bucket family, DuckDB-oracle-checkable
+    * end to end (e8). */
   def lshTopKPortable(corpus: DataFrame, queries: DataFrame,
                       id: String, vec: String, k: Int,
                       planes: Int = 4, tables: Int = 6,
-                      dim: Int = 64): DataFrame = {
-    val spark = corpus.sparkSession
-    val c = corpus
-      .select(col(id).as("neighbor_id"), col(vec).as("cv"),
-              posexplode(portableLshBuckets(col(vec), tables, planes, dim))
-                .as(Seq("tbl", "bkt")))
-    val q = broadcast(queries
-      .select(col(id).as("query_id"), col(vec).as("qv"),
-              posexplode(portableLshBuckets(col(vec), tables, planes, dim))
-                .as(Seq("tbl", "bkt"))))
-    val scored = c.join(q, Seq("tbl", "bkt"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .select("query_id", "qv", "neighbor_id", "cv")
-      .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("sim", cosineNative(spark, col("qv"), col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-              round(col("sim"), 4).as("sim"))
-  }
+                      dim: Int = 64): DataFrame =
+    lshTopKBy(corpus, queries, id, vec, k,
+      portableLshBuckets(_, tables, planes, dim))
 
   /** Deterministic Lloyd k-means over the embedding column — the
     * assignment builder [[ivfTopK]]'s Scaladoc promises ("a deployment
@@ -612,27 +604,26 @@ object Similarity {
     * pairwise-joined: the join key is (table, bucket). */
   def lshTopK(corpus: DataFrame, queries: DataFrame,
               id: String, vec: String, k: Int,
-              planes: Int = 4, tables: Int = 8, dim: Int = 64): DataFrame = {
-    val spark = corpus.sparkSession
-    val c = corpus
-      .select(col(id).as("neighbor_id"), col(vec).as("cv"),
-              posexplode(lshBucketsAll(spark, col(vec), tables, planes, dim))
-                .as(Seq("tbl", "bkt")))
-    val q = broadcast(queries
-      .select(col(id).as("query_id"), col(vec).as("qv"),
-              posexplode(lshBucketsAll(spark, col(vec), tables, planes, dim))
-                .as(Seq("tbl", "bkt"))))
-    val scored = c.join(q, Seq("tbl", "bkt"))
+              planes: Int = 4, tables: Int = 8, dim: Int = 64): DataFrame =
+    lshTopKBy(corpus, queries, id, vec, k,
+      lshBucketsAll(corpus.sparkSession, _, tables, planes, dim))
+
+  /** LSH top-k over any bucket family (`buckets`: vector → array of
+    * per-table bucket ids): corpus and broadcast queries explode to
+    * (tbl, bkt) rows and equi-join on them, each colliding pair is
+    * scored once by exact cosine, then cut per query. */
+  private def lshTopKBy(corpus: DataFrame, queries: DataFrame, id: String,
+                        vec: String, k: Int,
+                        buckets: Column => Column): DataFrame = {
+    def staged(df: DataFrame, idAs: String, vecAs: String) =
+      df.select(col(id).as(idAs), col(vec).as(vecAs),
+        posexplode(buckets(col(vec))).as(Seq("tbl", "bkt")))
+    topKBySim(staged(corpus, "neighbor_id", "cv")
+      .join(broadcast(staged(queries, "query_id", "qv")), Seq("tbl", "bkt"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .select("query_id", "qv", "neighbor_id", "cv")
       .dropDuplicates("query_id", "neighbor_id")
-      .withColumn("sim", cosineNative(spark, col("qv"), col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("sim").desc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"),
-              round(col("sim"), 4).as("sim"))
+      .withColumn("sim", cosineNative(corpus.sparkSession, col("qv"), col("cv"))), k)
   }
 
   /** Symmetric per-dimension int8 scalar quantization — the standard
@@ -1049,19 +1040,23 @@ object Similarity {
       .select(col("query_id"), col("subspace"), col("code"),
         floor(l2sq(queries.sparkSession, col("sv"), col("centroid")) * 1e6 + 0.5)
           .cast("long").as("__dq"))
-    val scored = corpusCodes
-      .select(col(id).as("neighbor_id"),
-        posexplode(col("codes")).as(Seq("subspace", "code")))
-      .join(broadcast(lut), Seq("subspace", "code"))
+    adcTopK(corpusCodes, lut, id, Nil, k)
+  }
+
+  /** The ADC scan of [[pqTopK]] and [[ivfpqTopK]]: the corpus explodes
+    * its m codes once and joins the broadcast query LUT on (`lists`,
+    * subspace, code); each (query, neighbor) distance is ONE sum of
+    * integer-quantized lookups (so shuffle merge order cannot flip
+    * near-tie ranks), then the per-query cut. */
+  private def adcTopK(corpusCodes: DataFrame, lut: DataFrame, id: String,
+                      lists: Seq[String], k: Int): DataFrame =
+    topKByDist(corpusCodes
+      .select((col(id).as("neighbor_id") +: lists.map(col)) :+
+        posexplode(col("codes")).as(Seq("subspace", "code")): _*)
+      .join(broadcast(lut), lists ++ Seq("subspace", "code"))
       .filter(col("query_id") =!= col("neighbor_id"))
       .groupBy("query_id", "neighbor_id")
-      .agg((sum(col("__dq")).cast("double") / 1e6).as("dist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("dist"))
-  }
+      .agg((sum(col("__dq")).cast("double") / 1e6).as("dist")), k)
 
   /** Residual vectors for IVF-PQ: rv = v − centroid(cluster), against
     * the BROADCAST coarse-centroid table. `withCluster` carries the
@@ -1132,11 +1127,7 @@ object Similarity {
     val sub = dim / m
     val q = queries.select(col(id).as("query_id"),
       transform(col(vec), _.cast("double")).as("qv"))
-    val probes = broadcast(q).join(broadcast(centroids), lit(true))
-      .withColumn("__csim", cosine(col("qv"), col("centroid")))
-      .withColumn("__crank", row_number().over(
-        Window.partitionBy("query_id").orderBy(col("__csim").desc, col("cluster"))))
-      .filter(col("__crank") <= nprobe)
+    val probes = probeCentroids(q, centroids, nprobe)
       .select(col("query_id"), col("cluster"),
         zip_with(col("qv"), col("centroid"), (x, c) => x - c).as("qr"))
     val lut = probes
@@ -1150,48 +1141,19 @@ object Similarity {
     // A corpus vector lives in exactly one cluster, so each (neighbor,
     // subspace) matches at most one LUT row per query and the sum is
     // over exactly m lookups when the neighbor's list is probed.
-    val scored = corpusCodes
-      .select(col(id).as("neighbor_id"), col("cluster"),
-        posexplode(col("codes")).as(Seq("subspace", "code")))
-      .join(broadcast(lut), Seq("cluster", "subspace", "code"))
-      .filter(col("query_id") =!= col("neighbor_id"))
-      .groupBy("query_id", "neighbor_id")
-      .agg((sum(col("__dq")).cast("double") / 1e6).as("dist"))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("dist"))
+    adcTopK(corpusCodes, lut, id, Seq("cluster"), k)
   }
 
-  /** IVF-PQ search as production runs it: ADC shortlist of k × overscan
-    * per query over probed lists only, then ONLY shortlisted rows fetch
-    * their raw vector for an exact squared-L2 re-rank — the
-    * [[pqTopKRerank]] discipline (explicit broadcast of the shortlist
-    * so the raw-vector table can never be shuffled) on top of the IVF
-    * probe pruning. */
+  /** IVF-PQ search as production runs it: an ADC shortlist of
+    * k × overscan per query over probed lists only, then the
+    * [[pqTopKRerank]] exact re-rank on top of the IVF probe pruning. */
   def ivfpqTopKRerank(corpusCodes: DataFrame, centroids: DataFrame,
                       codebook: DataFrame, corpus: DataFrame,
                       queries: DataFrame, id: String, vec: String,
                       k: Int, nprobe: Int = 2, overscan: Int = 4,
-                      m: Int = 8, dim: Int = 64): DataFrame = {
-    val asDouble = (c: Column) => transform(c, _.cast("double"))
-    val shortlist = ivfpqTopK(corpusCodes, centroids, codebook, queries,
-      id, vec, k * overscan, nprobe, m, dim)
-      .select(col("query_id"), col("neighbor_id"))
-    val q = broadcast(queries
-      .select(col(id).as("query_id"), asDouble(col(vec)).as("qv")))
-    val scored = broadcast(shortlist)
-      .join(corpus.select(col(id).as("neighbor_id"),
-        asDouble(col(vec)).as("cv")), Seq("neighbor_id"))
-      .join(q, Seq("query_id"))
-      .withColumn("dist", l2sq(corpus.sparkSession, col("qv"), col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("dist"))
-  }
+                      m: Int = 8, dim: Int = 64): DataFrame =
+    rerankExactL2(ivfpqTopK(corpusCodes, centroids, codebook, queries,
+      id, vec, k * overscan, nprobe, m, dim), corpus, queries, id, vec, k)
 
   /** PQ search as production runs it (FAISS's ADC + re-rank): the code
     * scan shortlists `k × overscan` candidates per query by
@@ -1203,26 +1165,25 @@ object Similarity {
   def pqTopKRerank(corpusCodes: DataFrame, codebook: DataFrame,
                    corpus: DataFrame, queries: DataFrame,
                    id: String, vec: String, k: Int, overscan: Int = 4,
-                   m: Int = 8, dim: Int = 64): DataFrame = {
+                   m: Int = 8, dim: Int = 64): DataFrame =
+    rerankExactL2(pqTopK(corpusCodes, codebook, queries, id, vec,
+      k * overscan, m, dim), corpus, queries, id, vec, k)
+
+  /** Exact squared-L2 top-k over a (query_id, neighbor_id, …) shortlist:
+    * only shortlisted neighbors fetch their raw vector. The shortlist is
+    * the tiny side (queries × k × overscan rows) and is broadcast
+    * explicitly, so the vector fetch can never degrade into shuffling
+    * the whole raw-vector table when AQE mis-estimates or is off. */
+  private def rerankExactL2(shortlist: DataFrame, corpus: DataFrame,
+                            queries: DataFrame, id: String, vec: String,
+                            k: Int): DataFrame = {
     val asDouble = (c: Column) => transform(c, _.cast("double"))
-    val shortlist = pqTopK(corpusCodes, codebook, queries, id, vec,
-      k * overscan, m, dim)
-      .select(col("query_id"), col("neighbor_id"))
     val q = broadcast(queries
       .select(col(id).as("query_id"), asDouble(col(vec)).as("qv")))
-    // The shortlist is the tiny side (queries × k × overscan rows) —
-    // broadcast it explicitly so the corpus-side vector fetch can
-    // never degrade into shuffling the whole raw-vector table when
-    // AQE mis-estimates or is off.
-    val scored = broadcast(shortlist)
+    topKByDist(broadcast(shortlist.select(col("query_id"), col("neighbor_id")))
       .join(corpus.select(col(id).as("neighbor_id"),
         asDouble(col(vec)).as("cv")), Seq("neighbor_id"))
       .join(q, Seq("query_id"))
-      .withColumn("dist", l2sq(corpus.sparkSession, col("qv"), col("cv")))
-    val w = Window.partitionBy("query_id")
-      .orderBy(col("dist").asc, col("neighbor_id").asc)
-    scored.withColumn("rank", row_number().over(w))
-      .filter(col("rank") <= k)
-      .select(col("query_id"), col("neighbor_id"), col("rank"), col("dist"))
+      .withColumn("dist", l2sq(corpus.sparkSession, col("qv"), col("cv"))), k)
   }
 }

@@ -327,8 +327,19 @@ object Warc {
     // derived small side at fixture scale, shuffle at crawl scale),
     // where a plain parallelized path list reports unknown size and
     // forces every downstream join to sort-merge regardless of data.
-    val paths = spark.read.format("binaryFile").load(path)
-      .select(col("path")).as[String]
+    // A glob in the last segment loads its directory with that glob as
+    // the file-name filter: handed the literal glob, the file source's
+    // metadata-log probe looks it up as a path and logs a
+    // FileNotFoundException stack trace on every read.
+    val hp = new org.apache.hadoop.fs.Path(path)
+    val isGlob = (s: String) => s.exists("*?[{".contains(_))
+    val reader = spark.read.format("binaryFile")
+    val files =
+      if (isGlob(hp.getName) && hp.getParent != null &&
+          !isGlob(hp.getParent.toString))
+        reader.option("pathGlobFilter", hp.getName).load(hp.getParent.toString)
+      else reader.load(path)
+    val paths = files.select(col("path")).as[String]
     recordRows(paths.flatMap { p =>
       val fp = new org.apache.hadoop.fs.Path(p)
       val in = fp.getFileSystem(conf.value).open(fp)

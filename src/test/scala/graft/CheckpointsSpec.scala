@@ -69,6 +69,16 @@ class CheckpointsSpec extends AnyFunSuite {
       case (f, code) if re.r.findFirstIn(code).isDefined => f
     }.toSet
 
+  /** The file of every match of `re` in `src/main`, one per match. */
+  private def matchesIn(re: String): Seq[String] =
+    mainSources.flatMap { case (f, code) => re.r.findAllIn(code).map(_ => f) }
+
+  test("one capped bucket aggregate, one pair emitter, one top-k tail") {
+    assert(matchesIn("""CollectSetCappedAgg\s*\.\s*Name\b""") == Seq("Dedup.scala"))
+    assert(matchesIn("""slice\(.*,\s*i\s*\+\s*2\s*,""") == Seq("Dedup.scala"))
+    assert(matchesIn("""col\("rank"\)\s*<=""") == Seq("Similarity.scala"))
+  }
+
   test("only Tables builds a session and only Checkpoints truncates lineage") {
     assert(mainSources.size > 50)
     assert(filesMatching("""SparkSession\s*\.\s*builder\b""") == Set("Tables.scala"))

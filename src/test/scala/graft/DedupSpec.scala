@@ -233,6 +233,57 @@ class DedupSpec extends AnyFunSuite {
     val uncapped = Dedup.minhashLshPairs(docs, "doc_id", "text", 0.9)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(capped.subsetOf(uncapped))
+
+    // Embedding path: 24 copies of vector 0 share every bucket with it,
+    // a hub over the cap in each table. Brute force: exact pairs that
+    // share some bucket holding 2..cap members.
+    val cap = 10
+    val base = Tables.embeddings(spark, Sf).filter(col("vec_id") < 300)
+      .select("vec_id", "embedding")
+    val hub = base.filter(col("vec_id") === 0).crossJoin(spark.range(24))
+      .select((col("id") + 100000L).as("vec_id"), col("embedding"))
+    val emb = base.unionByName(hub).cache()
+    def pairs(df: org.apache.spark.sql.DataFrame) =
+      df.select("id_a", "id_b", "sim").as[(Long, Long, Double)].collect().toSet
+    val lsh = (c: Option[Int]) => pairs(Dedup.embeddingNearDupPairsLsh(emb,
+      "vec_id", "embedding", 0.4, planes = 6, tables = 4, maxBucketSize = c))
+    val candidates = emb
+      .select(col("vec_id"), posexplode(Similarity.lshBucketsAll(spark,
+        col("embedding"), 4, 6, 64)).as(Seq("tbl", "bkt")))
+      .as[(Long, Int, Int)].collect()
+      .groupBy(r => (r._2, r._3)).values.map(_.map(_._1).sorted)
+      .filter(ms => ms.length >= 2 && ms.length <= cap)
+      .flatMap(ms => ms.combinations(2).map(p => (p(0), p(1)))).toSet
+    val brute = pairs(Dedup.embeddingNearDupPairsExact(emb, "vec_id",
+      "embedding", 0.4)).filter(p => candidates((p._1, p._2)))
+    val embCapped = lsh(Some(cap))
+    assert(embCapped == brute)
+    assert(embCapped.nonEmpty, "fixture must keep pairs under the cap")
+    val hubPair = (0L, 100000L)
+    assert(lsh(None).exists(p => (p._1, p._2) == hubPair))
+    assert(!embCapped.exists(p => (p._1, p._2) == hubPair))
+    emb.unpersist()
+  }
+
+  test("embedding LSH, incremental and SemDeDup caps aggregate with collect_set_capped, never a full-bucket size filter") {
+    val emb = Tables.embeddings(spark, Sf).filter(col("vec_id") < 40)
+      .select("vec_id", "embedding")
+    val cents = Similarity.kmeansCentroids(emb, "vec_id", "embedding",
+      k = 2, iters = 1)
+    val assign = Similarity.assignToCentroids(emb, "vec_id", "embedding",
+      cents)
+    val capped = Seq(
+      Dedup.embeddingNearDupPairsLsh(emb, "vec_id", "embedding", 0.4,
+        maxBucketSize = Some(7)),
+      Dedup.embeddingNearDupPairsIncremental(emb.filter(col("vec_id") < 30),
+        emb.filter(col("vec_id") >= 30), "vec_id", "embedding", 0.4,
+        maxBucketSize = Some(7)),
+      Dedup.semDedup(emb, "vec_id", "embedding", assign, cents, 0.4,
+        maxClusterSize = Some(7)))
+    capped.map(_.queryExecution.optimizedPlan.toString).foreach { plan =>
+      assert(plan.contains("collect_set_capped"), plan)
+      assert("""size\([^)]*\)\s*<=\s*7""".r.findFirstIn(plan).isEmpty, plan)
+    }
   }
 
   test("simhash block-LSH pairs equal brute-force hamming pairs (pigeonhole recall=1)") {

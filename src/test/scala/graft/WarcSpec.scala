@@ -91,6 +91,12 @@ class WarcSpec extends AnyFunSuite {
       assert(back == (1L to 20L).map(i =>
         (s"http://x.org/p/$i", if (i % 5 == 0) 404 else 200,
           s"payload number $i")).toSet)
+      // A glob in the last segment reads its directory through a file
+      // name filter: the same files, the same rows as the plain dir.
+      def rows(path: String) = Warc.records(spark, path)
+        .select(col("path"), col("target_uri"), col("payload").cast("string"))
+        .as[(String, String, String)].collect().sorted.toSeq
+      assert(rows(dir.toString + "/*.warc.gz") == rows(dir.toString))
     } finally graft.queries.Fixtures.deleteRecursively(dir)
   }
 
